@@ -3336,7 +3336,7 @@ def candle_stochastic_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "candle_cusum_drift",
     oracle=f"""
-WITH RECURSIVE {EVENTS_TICKS_CTE},
+WITH {EVENTS_TICKS_CTE},
 gold AS ({_GOLD_ORACLE_BODY}),
 c AS (
   SELECT symbol, window_start,
@@ -3355,20 +3355,31 @@ k AS (
   SELECT symbol, quantile_disc(abs(d), 0.5) AS k FROM d
   WHERE d IS NOT NULL GROUP BY symbol
 ),
-base AS (
-  SELECT d.symbol, d.rn, d.d, k.k FROM d JOIN k ON d.symbol = k.symbol
-  WHERE d.d IS NOT NULL
+gap AS (
+  SELECT symbol, min(rn) AS g FROM d
+  WHERE rn > 1 AND d IS NULL GROUP BY symbol
 ),
-rec(symbol, rn, su, sd) AS (
+base AS (
+  SELECT d.symbol, d.rn, d.d, k.k
+  FROM d JOIN k ON d.symbol = k.symbol
+  LEFT JOIN gap ON d.symbol = gap.symbol
+  WHERE d.rn > 1 AND (gap.g IS NULL OR d.rn < gap.g)
+),
+pre AS (
   SELECT symbol, rn,
-         greatest(CAST(0 AS BIGINT), d - k),
-         greatest(CAST(0 AS BIGINT), -d - k)
-  FROM base WHERE rn = 2
-  UNION ALL
-  SELECT b.symbol, b.rn,
-         greatest(CAST(0 AS BIGINT), p.su + b.d - b.k),
-         greatest(CAST(0 AS BIGINT), p.sd - b.d - b.k)
-  FROM base b JOIN rec p ON p.symbol = b.symbol AND b.rn = p.rn + 1
+         sum(d - k) OVER w AS su_s,
+         sum(-d - k) OVER w AS sd_s
+  FROM base
+  WINDOW w AS (PARTITION BY symbol ORDER BY rn
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+),
+rec AS (
+  SELECT symbol, rn,
+         CAST(su_s - least(0, min(su_s) OVER w) AS BIGINT) AS su,
+         CAST(sd_s - least(0, min(sd_s) OVER w) AS BIGINT) AS sd
+  FROM pre
+  WINDOW w AS (PARTITION BY symbol ORDER BY rn
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 )
 SELECT r.symbol,
        CAST(count(*) AS BIGINT) AS n_minutes,
@@ -3387,11 +3398,14 @@ GROUP BY r.symbol
     "s_up = max(0, s_up + d - k) and s_dn = max(0, s_dn - d - k) over "
     "integer-grid close diffs (floor(close * 1e8)), with the allowance "
     "k self-calibrated to each symbol's DISCRETE median |d| and alarms "
-    "at s > 5k. The clamp makes BOTH scans non-associative (window "
-    "frames and chunked offset composition cannot express them), so "
+    "at s > 5k. The clamp makes BOTH scans non-associative as written "
+    "(chunked offset composition cannot express them), so "
     "each runs on `keyed_exact_clamped_cumsum` — honestly sequential "
-    "per symbol, symbols the parallel unit; the oracle carries both "
-    "states through ONE recursive CTE. Pure integer max/add on a "
+    "per symbol, symbols the parallel unit. The oracle is an independent "
+    "closed form of the same clamp: s_n = S_n - min(0, min over j <= n "
+    "of S_j), with S the prefix sum of d - k (up) or -d - k (down), as "
+    "two running windows; a null diff ends the series where the "
+    "recursion's chain would stop. Pure integer max/add on a "
     "deterministic grid end to end: trajectories, alarm counts, and "
     "maxima hash-match bit-for-bit. The diff stage rides chunked_lag "
     "(parallel over symbol x day), and k broadcasts back — the only "

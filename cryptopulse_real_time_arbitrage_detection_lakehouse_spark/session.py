@@ -41,6 +41,15 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Driver heap when $SPARK_DRIVER_MEMORY is unset: three quarters of
+    physical memory, capped at 16g, in whole MiB. A fixed 16g asked for
+    more than a 15 GiB host has."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys_bytes * 3 // 4 >> 20, 16 << 10)}m"
+
+
 def get_spark(
     app_name: str = "cryptopulse-spark",
     *,
@@ -61,7 +70,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "true" if ui else "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         # Streaming-state defaults mirroring the reference's recorded
         # checkpoint conf (SURVEY.md section 4.2): strict distribution and
         # min multiple-watermark policy are engine defaults; kept explicit.

@@ -131,6 +131,36 @@ HISTORY_SCHEMA = T.StructType(
 )
 
 
+_LISTING_THRESHOLD_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _read_files(
+    spark: SparkSession,
+    paths: list[str],
+    *,
+    schema: T.StructType | None = None,
+    **options: str,
+) -> DataFrame:
+    """Parquet relation over files a log already names, listed on the
+    driver. Past the listing threshold (32 paths by default) Spark
+    re-lists an explicit file list with a distributed job, which was
+    slower than the driver at every size measured (see `DeltaTable.read`).
+    ``parquet()`` builds the relation's file index eagerly, so raising
+    the threshold around that one call is enough. The setting
+    decides how files are listed, never which rows are read, so threads
+    sharing a session need no lock: an interleaved save/restore can only
+    leave the other listing mode in place."""
+    reader = spark.read.options(**options)
+    if schema is not None:
+        reader = reader.schema(schema)
+    prior = spark.conf.get(_LISTING_THRESHOLD_CONF)
+    spark.conf.set(_LISTING_THRESHOLD_CONF, str(2**31 - 1))
+    try:
+        return reader.parquet(*paths)
+    finally:
+        spark.conf.set(_LISTING_THRESHOLD_CONF, prior)
+
+
 def _commit_path(log_dir: str, version: int) -> str:
     return os.path.join(log_dir, f"{version:020d}.json")
 
@@ -1298,6 +1328,11 @@ class DeltaTable:
     ) -> DataFrame:
         """Snapshot read; ``version`` time-travels (``VERSION AS OF``).
 
+        The scan is planned from the log's ``add`` actions and its files
+        are listed on the driver, never by a Spark listing job (on a
+        4-core host: 61 files 0.016 s vs 0.187 s for the job, 4000 files
+        0.25 s vs 5.05 s).
+
         Column-mapped tables (reader protocol v2) read under their
         PHYSICAL parquet names and are projected back to logical names —
         partitionValues in the log are keyed physically too.
@@ -1334,6 +1369,7 @@ class DeltaTable:
         keep_meta: bool = False,
         where: str | None = None,
         extra_phys_cols: list[str] | None = None,
+        files: set[str] | None = None,
     ) -> DataFrame:
         """Build the snapshot DataFrame. ``keep_meta=True`` appends
         ``__file`` (data file name) and ``__rid`` (row index within the
@@ -1342,8 +1378,15 @@ class DeltaTable:
         still applies the row filter). ``extra_phys_cols`` additionally
         reads the named physical LONG columns (null where a file lacks
         them) — row tracking's materialized-id columns, which live
-        outside the logical schema."""
+        outside the logical schema. ``files`` restricts the scan to the
+        live files with those names (``__file`` values)."""
         meta, adds = self._snapshot_state(version)
+        if files is not None:
+            adds = [
+                a
+                for a in adds
+                if os.path.basename(urllib.parse.unquote(a["path"])) in files
+            ]
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
         part_cols = meta.get("partitionColumns") or []
         mapping = self._column_mapping(meta) or {}
@@ -1463,7 +1506,7 @@ class DeltaTable:
 
         if not part_cols:
             paths = [os.path.join(self.path, urllib.parse.unquote(a["path"])) for a in adds]
-            out = spark.read.schema(data_schema).parquet(*paths).select(
+            out = _read_files(spark, paths, schema=data_schema).select(
                 *logical, *meta_cols
             )
         elif self._hive_layout_consistent(adds, part_cols, phys):
@@ -1489,10 +1532,8 @@ class DeltaTable:
                 os.path.join(self.path, urllib.parse.unquote(a["path"]))
                 for a in adds
             ]
-            raw = (
-                spark.read.option("basePath", self.path)
-                .schema(read_schema)
-                .parquet(*paths)
+            raw = _read_files(
+                spark, paths, schema=read_schema, basePath=self.path
             )
             # pair each non-partition schema field with its already-built
             # logical projection (mode-correct: id mode reads logical
@@ -1523,7 +1564,7 @@ class DeltaTable:
             types = {f.name: f.dataType for f in schema.fields}
             pieces = []
             for key, paths in sorted(by_part.items(), key=lambda kv: kv[0]):
-                df = spark.read.schema(data_schema).parquet(*paths).select(
+                df = _read_files(spark, paths, schema=data_schema).select(
                     *logical, *meta_cols
                 )
                 for c, raw in zip(part_cols, key):
@@ -3974,7 +4015,7 @@ class DeltaTable:
                 "skipped_files": skipped,
             }
         version = self.write(
-            spark.read.parquet(*new),
+            _read_files(spark, new),
             _operation="COPY INTO",
             _domains={
                 self.COPY_DOMAIN: json.dumps(ledger, sort_keys=True)
@@ -6916,7 +6957,7 @@ class DeltaTable:
                 os.path.join(self.path, urllib.parse.unquote(a["path"]))
                 for a in adds_list
             ]
-            df = spark.read.schema(data_schema).parquet(*paths).select(
+            df = _read_files(spark, paths, schema=data_schema).select(
                 F.element_at(
                     F.split(F.col("_metadata.file_path"), "/"), -1
                 ).alias("__file"),
@@ -8291,28 +8332,35 @@ class DeltaMergeBuilder:
                 col_types = {f.name: f.dataType for f in schema.fields}
         self._validate(col_types, gen, self._source.columns)
 
-        if rt:
-            # carry each target row's stable id through the rewrite:
-            # copies/updates preserve it (materialized below); inserts
-            # get NULL and derive fresh ids from the new file's
-            # baseRowId — the spec's fallback does the allocation
-            tgt = t._attach_row_ids(
-                spark,
-                t._scan(
+        def target(files: set[str] | None = None) -> DataFrame:
+            """The target scan, or only its live ``files`` by name."""
+            if rt:
+                # carry each target row's stable id through the rewrite:
+                # copies/updates preserve it (materialized below);
+                # inserts get NULL and derive fresh ids from the new
+                # file's baseRowId — the spec's fallback does the
+                # allocation
+                scan = t._attach_row_ids(
                     spark,
-                    keep_meta=True,
-                    extra_phys_cols=list(t._rt_mat_cols(meta)),
-                ),
-                meta,
-                adds,
-            )
-        else:
-            tgt = t._scan(spark, keep_meta=True)
-        for f in evolved_fields:
-            # pre-evolution target rows read NULL for the new columns
-            tgt = tgt.withColumn(
-                f.name, F.lit(None).cast(t._strip_meta(f.dataType))
-            )
+                    t._scan(
+                        spark,
+                        keep_meta=True,
+                        extra_phys_cols=list(t._rt_mat_cols(meta)),
+                        files=files,
+                    ),
+                    meta,
+                    adds,
+                )
+            else:
+                scan = t._scan(spark, keep_meta=True, files=files)
+            for f in evolved_fields:
+                # pre-evolution target rows read NULL for the new columns
+                scan = scan.withColumn(
+                    f.name, F.lit(None).cast(t._strip_meta(f.dataType))
+                )
+            return scan
+
+        tgt = target()
         src = self._source.withColumn("__src_match", F.lit(True))
         j_cond = F.expr(self._cond)
         matches = (
@@ -8323,6 +8371,9 @@ class DeltaMergeBuilder:
         )
 
         touched: set[str] = set()
+        #: files holding at least one matched target row — set when a
+        #: matched clause ran the per-file pass below
+        matched_files: set[str] | None = None
         if self._matched:
             # one pass does double duty: the cardinality check (any
             # target row matched twice) AND fire detection — a file
@@ -8357,6 +8408,7 @@ class DeltaMergeBuilder:
                     "would be non-deterministic (delta's cardinality "
                     "check); de-duplicate the source on the merge keys"
                 )
+            matched_files = {r["__file"] for r in per_file}
             touched |= {r["__file"] for r in per_file if r["anyf"]}
         if self._by_source:
             bs_any = None
@@ -8382,7 +8434,7 @@ class DeltaMergeBuilder:
         counts: dict[int, int] = {}
         try:
             if touched_list:
-                touched_tgt = tgt.filter(F.col("__file").isin(touched_list))
+                touched_tgt = target(touched)
                 if self._matched:
                     # cardinality check passed: each target row joins ≤1
                     # source row, so left-outer cannot fan copies out
@@ -8462,10 +8514,17 @@ class DeltaMergeBuilder:
 
             ins_branches: list[tuple[int, str, dict | None]] = []
             if self._not_matched:
-                anti = (
-                    src.alias("source")
-                    .join(tgt.alias("target"), j_cond, "left_anti")
-                )
+                # every source row with a match has it in a matched
+                # file, so the anti-join reads only those — or none
+                anti = src.alias("source")
+                if matched_files is None:
+                    anti = anti.join(tgt.alias("target"), j_cond, "left_anti")
+                elif matched_files:
+                    anti = anti.join(
+                        target(matched_files).alias("target"),
+                        j_cond,
+                        "left_anti",
+                    )
                 chain = None
                 for i, (c, values) in enumerate(self._not_matched):
                     cnd = F.expr(c) if c else F.lit(True)

@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from .delta import _read_files
+
 HISTORY_SCHEMA = T.StructType(
     [
         T.StructField("version", T.LongType(), False),
@@ -176,7 +178,7 @@ class LakehouseTable:
         if not paths:
             schema = T.StructType.fromJson(json.loads(records[-1]["schema"]))
             return spark.createDataFrame([], schema)
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+        return _read_files(spark, paths, mergeSchema="true")
 
     def history(self, spark: SparkSession) -> DataFrame:
         """The commit log as a DataFrame — ``DeltaTable.history()`` twin."""

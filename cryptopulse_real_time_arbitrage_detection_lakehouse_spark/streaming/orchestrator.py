@@ -30,6 +30,7 @@ The reference's observability shape maps 1:1:
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
 from dataclasses import dataclass
@@ -44,6 +45,11 @@ __all__ = [
     "PipelineListener",
     "run_medallion_concurrent",
 ]
+
+
+def _finite(rate: float | None) -> float | None:
+    """A progress rate as JSON-safe: NaN (no elapsed time) becomes null."""
+    return rate if rate is not None and math.isfinite(rate) else None
 
 
 class PipelineListener(StreamingQueryListener):
@@ -102,6 +108,21 @@ class PipelineListener(StreamingQueryListener):
             "batchId": p.batchId,
             "numInputRows": p.numInputRows,
             "timestamp": p.timestamp,
+            # per-batch phases (addBatch, getBatch, queryPlanning,
+            # walCommit, commitOffsets, ...), the event-time watermark,
+            # state-store size per stateful operator and the rates
+            "durationMs": dict(p.durationMs),
+            "watermark": (p.eventTime or {}).get("watermark"),
+            "stateOperators": [
+                {
+                    "numRowsTotal": op.numRowsTotal,
+                    "memoryUsedBytes": op.memoryUsedBytes,
+                    "numRowsDroppedByWatermark": op.numRowsDroppedByWatermark,
+                }
+                for op in p.stateOperators or []
+            ],
+            "inputRowsPerSecond": _finite(p.inputRowsPerSecond),
+            "processedRowsPerSecond": _finite(p.processedRowsPerSecond),
         }
         # observe()-attached audit metrics ride the same progress event;
         # recording them here is what lets the JSON logs reconcile with

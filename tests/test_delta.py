@@ -29,6 +29,35 @@ def make_df(spark, start, n):
     )
 
 
+def listing_jobs(spark, group, build):
+    """Run ``build()`` under Spark job group ``group``; return its result
+    with the (jobs, listing jobs) Spark ran for it. A listing job is
+    Spark's distributed re-listing of a path list, which it runs once a
+    relation names more paths than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(10_000)
+    jobs = jsc.statusStore().jobsList(None)
+    mine = [
+        j
+        for j in (jobs.apply(i) for i in range(jobs.size()))
+        if j.jobGroup().isDefined() and j.jobGroup().get() == group
+    ]
+    listing = [
+        j
+        for j in mine
+        if j.description().isDefined()
+        and j.description().get().startswith("Listing leaf files")
+    ]
+    return out, len(mine), len(listing)
+
+
 class TestDeltaBatch:
     def test_append_read_roundtrip(self, spark, tmp_path):
         t = DeltaTable(str(tmp_path / "t"))
@@ -122,6 +151,77 @@ class TestDeltaBatch:
         t.write(make_df(spark, 0, 4), partition_by=["sym"])
         with pytest.raises(ValueError, match="partition_by"):
             t.write(make_df(spark, 4, 2))
+
+
+class TestDriverSideListing:
+    """Scans name their files from the log, so Spark must not re-list
+    them with a distributed job — even past the 32-path threshold at
+    which it otherwise would."""
+
+    N = 40  # live files, one append each
+
+    @pytest.fixture(scope="class")
+    def built(self, spark, tmp_path_factory):
+        """A table of N one-row appends (one also holds a null key) and
+        its rows; tests copy it before they write."""
+        path = str(tmp_path_factory.mktemp("listing") / "t")
+        t = DeltaTable(path)
+        rows = []
+        for i in range(self.N):
+            batch = [(i, f"v{i}")] + ([(None, "null-key")] if i == 7 else [])
+            rows += batch
+            t.write(
+                spark.createDataFrame(batch, "k long, v string").coalesce(1)
+            )
+        return path, rows
+
+    @staticmethod
+    def _sorted(pairs):
+        return sorted((k is None, k, v) for k, v in pairs)
+
+    def test_reads_start_no_job(self, spark, built):
+        path, rows = built
+        t = DeltaTable(path)
+        assert len(t._snapshot_state(None)[1]) == self.N
+        for group, build in [
+            ("read", lambda: t.read(spark)),
+            ("read-where", lambda: t.read(spark, where="k >= 2")),
+            ("read-version", lambda: t.read(spark, version=self.N - 3)),
+        ]:
+            df, jobs, listing = listing_jobs(spark, f"dsl-{group}", build)
+            assert (jobs, listing) == (0, 0), group
+            assert df.count() > 32
+        got = [(r.k, r.v) for r in t.read(spark).collect()]
+        assert self._sorted(got) == self._sorted(rows)
+
+    def test_merge_starts_no_listing_job_and_equals_replay(
+        self, spark, built, tmp_path
+    ):
+        import shutil
+
+        path, rows = built
+        t = DeltaTable(shutil.copytree(path, str(tmp_path / "t")))
+        replay = dict(rows)
+
+        def merge(src_rows):
+            src = spark.createDataFrame(src_rows, "k long, v string")
+            replay.update(src_rows)  # <=>: a null key matches the null key
+            return t.merge(src, ["k"])
+
+        # matched keys in three files, the null key, unmatched keys
+        _, _, listing = listing_jobs(
+            spark,
+            "dsl-merge",
+            lambda: merge(
+                [(3, "u3"), (21, "u21"), (38, "u38"), (None, "u-null"),
+                 (1000, "i1000"), (1001, "i1001")]
+            ),
+        )
+        assert listing == 0
+        # no key matches: inserts need no anti-join against any file
+        merge([(2000, "i2000"), (2001, "i2001")])
+        got = [(r.k, r.v) for r in t.read(spark).collect()]
+        assert self._sorted(got) == self._sorted(replay.items())
 
 
 class TestDeltaEvolutionAndMaintenance:

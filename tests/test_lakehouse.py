@@ -14,6 +14,8 @@ from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.streaming import 
     read_parquet_stream,
 )
 
+from test_delta import listing_jobs
+
 
 def make_df(spark, start, n, extra_col=False):
     df = spark.range(start, start + n).select(
@@ -74,6 +76,22 @@ class TestBatchLakehouse:
             raise AssertionError("expected ValueError for missing version")
         except ValueError:
             pass
+
+    def test_many_version_read_lists_on_driver(self, spark, tmp_path):
+        """Past 32 version directories Spark would re-list them with a
+        distributed job; the log already names them."""
+        t = LakehouseTable(str(tmp_path / "t"))
+        for v in range(36):
+            t.append(make_df(spark, 2 * v, 2))
+        for version in (None, 34):
+            df, _, listing = listing_jobs(
+                spark,
+                f"lakehouse-read-{version}",
+                lambda: t.read(spark, version=version),
+            )
+            assert listing == 0
+            n = 2 * (35 if version is None else version) + 2
+            assert sorted(r.id for r in df.collect()) == list(range(n))
 
 
 class TestStreamingLakehouseSink:

@@ -68,6 +68,27 @@ class TestConcurrentPipeline:
             assert "progress" in events
             assert events[-1] == "terminated"
 
+        # each progress line carries the hop's full progress: phase
+        # durations, watermark, state-store size and the rates
+        gold = [
+            json.loads(line)
+            for line in open(os.path.join(log_dir, "gold_candles_live.log"))
+        ]
+        rec = next(
+            r for r in gold if r["event"] == "progress" and r["numInputRows"]
+        )
+        assert {"addBatch", "triggerExecution", "walCommit"} <= set(
+            rec["durationMs"]
+        )
+        assert rec["watermark"].startswith(("19", "20"))
+        assert rec["stateOperators"]
+        for op in rec["stateOperators"]:
+            assert op["numRowsTotal"] >= 0
+            assert op["memoryUsedBytes"] > 0
+            assert op["numRowsDroppedByWatermark"] >= 0
+        assert rec["processedRowsPerSecond"] > 0
+        assert "inputRowsPerSecond" in rec
+
     def test_failed_job_propagates_and_stops_siblings(self, spark, tmp_path):
         """A crashed child must surface its exception and take the rest of
         the pipeline down — the reference's Popen children die silently."""
