@@ -205,13 +205,6 @@ def main() -> None:
         quiesce(spark)
         cold = run_query(spark, name, sf_dir)
         cold_first[name] = round(cold, 4)
-        if name.endswith("_combined_audit") or name == "registry_coverage_audit":
-            # driver-coverage constructs that re-run a whole module's
-            # member queries: one pass records the cost without tripling
-            # ~140 member executions; the members' own best-of-3 lines
-            # are the perf signal
-            timings[name] = round(cold, 4)
-            continue
         best_q = cold
         for _ in range(2):
             best_q = min(best_q, run_query(spark, name, sf_dir))

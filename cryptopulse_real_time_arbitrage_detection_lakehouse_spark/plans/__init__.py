@@ -23,6 +23,5 @@ from . import multimodal  # noqa: E402,F401
 from . import inspection  # noqa: E402,F401
 from . import olap  # noqa: E402,F401
 from . import graph  # noqa: E402,F401
-from . import combined  # noqa: E402,F401  (must import LAST: members)
 
 __all__ = ["QuerySpec", "register", "get", "all_queries", "all_oracles"]

@@ -83,22 +83,15 @@ def _build_delta_table(
 #: (history, time travel, CDF, streaming tails) still build fresh: a
 #: clone's collapsed history would change what they test.
 _BASE_TABLES: dict[tuple[str, str], str] = {}
-#: build lock (r12 ADVICE): the combined audits run ~20 delta members from
-#: a thread pool, each reaching _base_delta_table on first touch — an
-#: unguarded check-then-build would run the 5-write base build once per
-#: thread into orphaned tempdirs. Same pattern as medallion._GOLD_LOCK.
-_BASE_LOCK = __import__("threading").Lock()
 
 
 def _base_delta_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     key = (spark.sparkContext.applicationId, sf_dir)
-    with _BASE_LOCK:
-        path = _BASE_TABLES.get(key)
-        if path is None or not os.path.exists(os.path.join(path, "_delta_log")):
-            base = _build_delta_table(spark, sf_dir, fresh=True)
-            _BASE_TABLES[key] = base.path
-        else:
-            base = DeltaTable(path)
+    path = _BASE_TABLES.get(key)
+    if path is not None and os.path.exists(os.path.join(path, "_delta_log")):
+        return DeltaTable(path)
+    base = _build_delta_table(spark, sf_dir, fresh=True)
+    _BASE_TABLES[key] = base.path
     return base
 
 

@@ -61,11 +61,6 @@ def _gold(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: gold query), while the parquet table is durable, survives session
 #: restarts, and gives downstream plans real column pruning per branch.
 _GOLD_CACHE: dict[str, tuple[float, str]] = {}
-#: serializes first-touch materialization when combined-audit member
-#: queries run from a thread pool (plans/combined.py) — a check-then-build
-#: race would build the same table twice into two tempdirs (wasted work,
-#: not wrong results); the lock makes the second thread wait and reuse.
-_GOLD_LOCK = __import__("threading").Lock()
 
 
 def _gold_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,14 +76,13 @@ def _gold_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_file = os.path.join(sf_dir, "events.parquet")
     mtime = os.path.getmtime(events_file) if os.path.exists(events_file) else 0
     key = os.path.abspath(sf_dir)
-    with _GOLD_LOCK:
-        cached = _GOLD_CACHE.get(key)
-        if cached is not None and (cached[0] != mtime or not os.path.isdir(cached[1])):
-            cached = None
-        if cached is None:
-            path = tempfile.mkdtemp(prefix="cpgold_") + "/gold_candles"
-            _gold(spark, sf_dir).write.parquet(path)
-            _GOLD_CACHE[key] = cached = (mtime, path)
+    cached = _GOLD_CACHE.get(key)
+    if cached is not None and (cached[0] != mtime or not os.path.isdir(cached[1])):
+        cached = None
+    if cached is None:
+        path = tempfile.mkdtemp(prefix="cpgold_") + "/gold_candles"
+        _gold(spark, sf_dir).write.parquet(path)
+        _GOLD_CACHE[key] = cached = (mtime, path)
     return spark.read.parquet(cached[1])
 
 

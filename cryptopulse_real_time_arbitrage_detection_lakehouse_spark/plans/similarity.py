@@ -262,21 +262,17 @@ ORDER BY cosine DESC, a.vec_id LIMIT {TOP_K}
 #: a module constant and the testdata tables are immutable; the index
 #: lives on disk so it survives Spark session restarts within a process.
 _ANN_INDEX_CACHE: dict[tuple[str, str], str] = {}
-#: build serialization for thread-pooled combined-audit members — a
-#: check-then-build race would build an index twice (wasteful, not wrong)
-_ANN_INDEX_LOCK = __import__("threading").Lock()
 
 
 def _cached_index_path(kind: str, sf_dir: str, build) -> str:
     import tempfile
 
     key = (kind, os.path.abspath(sf_dir))
-    with _ANN_INDEX_LOCK:
-        path = _ANN_INDEX_CACHE.get(key)
-        if path is None or not os.path.isdir(path):
-            path = tempfile.mkdtemp(prefix=f"cp{kind}_") + f"/{kind}_index"
-            build(path)
-            _ANN_INDEX_CACHE[key] = path
+    path = _ANN_INDEX_CACHE.get(key)
+    if path is None or not os.path.isdir(path):
+        path = tempfile.mkdtemp(prefix=f"cp{kind}_") + f"/{kind}_index"
+        build(path)
+        _ANN_INDEX_CACHE[key] = path
     return path
 
 

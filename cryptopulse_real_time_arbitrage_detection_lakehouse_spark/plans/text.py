@@ -3075,8 +3075,6 @@ def doc_bloom_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: charges the build to a `:index_build` line, the query line measures
 #: the probe alone).
 _BLOOM_INDEX_CACHE: dict[str, str] = {}
-#: build serialization for thread-pooled combined-audit members
-_BLOOM_INDEX_LOCK = __import__("threading").Lock()
 
 
 def _bloom_bits_path(spark: SparkSession, sf_dir: str) -> str:
@@ -3085,28 +3083,27 @@ def _bloom_bits_path(spark: SparkSession, sf_dir: str) -> str:
     from ..operators.bloom_index import write_bloom_bits
 
     key = os.path.abspath(sf_dir)
-    with _BLOOM_INDEX_LOCK:
-        path = _BLOOM_INDEX_CACHE.get(key)
-        if path is not None and os.path.isdir(path):
-            return path
-        corpus = (
-            spread(_docs(spark, sf_dir), by="doc_id")
-            .filter(
-                F.conv(
-                    F.substring(
-                        F.md5(F.col("doc_id").cast("string")), 1, 2
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                < SPLIT_TRAIN_LT
-            )
-            .select(F.md5(F.lower(F.trim(F.col("text")))).alias("digest"))
-            .distinct()
+    path = _BLOOM_INDEX_CACHE.get(key)
+    if path is not None and os.path.isdir(path):
+        return path
+    corpus = (
+        spread(_docs(spark, sf_dir), by="doc_id")
+        .filter(
+            F.conv(
+                F.substring(
+                    F.md5(F.col("doc_id").cast("string")), 1, 2
+                ),
+                16,
+                10,
+            ).cast("long")
+            < SPLIT_TRAIN_LT
         )
-        path = tempfile.mkdtemp(prefix="cpbloom_") + "/bloom_bits"
-        write_bloom_bits(corpus, path, m=BF_M, k=BF_K)
-        _BLOOM_INDEX_CACHE[key] = path
+        .select(F.md5(F.lower(F.trim(F.col("text")))).alias("digest"))
+        .distinct()
+    )
+    path = tempfile.mkdtemp(prefix="cpbloom_") + "/bloom_bits"
+    write_bloom_bits(corpus, path, m=BF_M, k=BF_K)
+    _BLOOM_INDEX_CACHE[key] = path
     return path
 
 

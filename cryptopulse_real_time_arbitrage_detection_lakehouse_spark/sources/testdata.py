@@ -31,9 +31,8 @@ _EVENT_TIME_COLUMNS = {"events": ("ts",)}
 #: cost: every ``spark.read.parquet`` call re-lists the path and re-reads
 #: the footer to infer the schema (~0.11 s warm vs ~0.025 s with an
 #: explicit schema, measured r12). Query fns call load_table hundreds of
-#: times per bench/correctness pass (the combined audits alone build ~160
-#: member plans), so schema inference was a double-digit-seconds
-#: driver-side tax (guide §7.3: planning work is single-threaded driver
+#: times per bench/correctness pass, so schema inference was a
+#: double-digit-seconds driver-side tax (guide §7.3: planning work is single-threaded driver
 #: time). Caching the SCHEMA only — never the DataFrame object — keeps
 #: every call's expression IDs fresh, so multi-load self-joins (tpch_q21
 #: et al.) stay unambiguous, and nothing about execution changes: each

@@ -16,7 +16,6 @@ the classpath to actually run.
 
 from __future__ import annotations
 
-import threading
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -33,46 +32,21 @@ from pyspark.sql.streaming import StreamingQuery
 STREAM_SHUFFLE_PARTITIONS = 4
 
 
-#: re-entrancy guard: the combined audits (plans/combined.py) run member
-#: queries from a thread pool, so two drains' scopes can overlap. Scopes
-#: are tracked PER SESSION (a pooled member runs on its own cloned
-#: session since r13, so cross-thread overlap mutates disjoint confs) as
-#: a LIFO stack of saved priors: nested scopes with DIFFERENT widths
-#: (n=4 drains nesting inside n=16 stateful ones, or vice versa) each
-#: restore exactly the value they displaced — the r12 ref-count restored
-#: only the outermost prior, leaving an inner scope's exit at the inner
-#: width (r12 ADVICE).
-_SCOPE_LOCK = threading.Lock()
-_SCOPE_STATE: dict[tuple, list] = {}  # session key -> [saved prior, ...]
-
-
-def _session_key(spark: SparkSession) -> tuple:
-    # applicationId + JVM-session identity: cloned sessions share the
-    # context but have their OWN SQLConf, so each needs its own stack.
-    return (spark.sparkContext.applicationId, spark._jsparkSession.hashCode())
-
-
 @contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int = STREAM_SHUFFLE_PARTITIONS):
     """Temporarily set ``spark.sql.shuffle.partitions`` around a bounded
     stream start+drain. Streaming state partitioning is read from the
     session conf when the query's checkpoint is created — the fresh
     per-call checkpoints in `plans/streaming.py` make this scope exact —
-    and the conf is restored for whatever batch work follows. Thread-safe
-    via a per-session LIFO stack of saved priors."""
+    and the prior width is restored for whatever batch work follows, on
+    error too. Nested scopes restore LIFO, each the width it displaced."""
     key = "spark.sql.shuffle.partitions"
-    skey = _session_key(spark)
-    with _SCOPE_LOCK:
-        stack = _SCOPE_STATE.setdefault(skey, [])
-        stack.append(spark.conf.get(key))
-        spark.conf.set(key, str(n))
+    prior = spark.conf.get(key)
+    spark.conf.set(key, str(n))
     try:
         yield
     finally:
-        with _SCOPE_LOCK:
-            spark.conf.set(key, stack.pop())
-            if not stack:
-                _SCOPE_STATE.pop(skey, None)
+        spark.conf.set(key, prior)
 
 
 def kafka_records(df: DataFrame, *, key: Column | str) -> DataFrame:

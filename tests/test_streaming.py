@@ -36,6 +36,7 @@ from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.streaming import 
 )
 from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.streaming.sinks import (
     drain,
+    scoped_shuffle_partitions,
 )
 
 
@@ -920,3 +921,29 @@ def test_arb_pnl_chained_stream_has_two_stateful_operators(spark, tmp_path):
         out.explain()
     plan = buf.getvalue()
     assert plan.count("StateStoreSave") == 2, plan
+
+
+SHUFFLE_KEY = "spark.sql.shuffle.partitions"
+
+
+def test_scope_stack_restores_mixed_width_nesting(spark):
+    """Nested scopes with different widths restore LIFO: each exit puts
+    back the width its own entry displaced, not the outermost prior."""
+    prior = spark.conf.get(SHUFFLE_KEY)
+    with scoped_shuffle_partitions(spark, 16):
+        assert spark.conf.get(SHUFFLE_KEY) == "16"
+        with scoped_shuffle_partitions(spark, 4):
+            assert spark.conf.get(SHUFFLE_KEY) == "4"
+        assert spark.conf.get(SHUFFLE_KEY) == "16"
+    assert spark.conf.get(SHUFFLE_KEY) == prior
+
+
+def test_scope_restores_prior_width_on_error(spark):
+    """A drain that raises inside the scope must not leave the session's
+    batch work at the narrow streaming width."""
+    prior = spark.conf.get(SHUFFLE_KEY)
+    with pytest.raises(RuntimeError, match="drain failed"):
+        with scoped_shuffle_partitions(spark, 4):
+            assert spark.conf.get(SHUFFLE_KEY) == "4"
+            raise RuntimeError("drain failed")
+    assert spark.conf.get(SHUFFLE_KEY) == prior
