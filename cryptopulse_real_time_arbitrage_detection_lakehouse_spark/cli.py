@@ -5,13 +5,13 @@ orchestrator process, and three check scripts (SURVEY.md sections 3.1-3.2).
 This module is the single CLI a migrating user drives instead:
 
     python -m cryptopulse_real_time_arbitrage_detection_lakehouse_spark \
-        pipeline --raw-dir RAW --out-root OUT [--concurrent]
+        pipeline --raw-dir RAW --out-root OUT [--log-dir LOGS]
     python -m ... query gold_candles_1m --sf-dir /root/testdata/sf0.001
     python -m ... list [--tag text]
 
-``pipeline`` runs the bronze→silver→gold medallion (sequential
-``availableNow`` drains by default; ``--concurrent`` supervises all three
-hops live, the reference's process topology). ``query`` executes any
+``pipeline`` runs the bronze→silver→gold medallion as sequential
+``availableNow`` drains; ``--log-dir`` writes each hop's progress records
+to ``<log-dir>/<query name>.log``. ``query`` executes any
 registered operator and shows rows (the ``check_*`` scripts' role).
 ``list`` prints the registry — the catalog of everything the engine runs.
 """
@@ -33,12 +33,8 @@ def _build_parser() -> argparse.ArgumentParser:
     pipe.add_argument("--out-root", required=True, help="output root for the 3 layers")
     pipe.add_argument("--watermark", default="10 minutes")
     pipe.add_argument(
-        "--concurrent",
-        action="store_true",
-        help="supervise all three hops live (reference topology) instead of "
-        "sequential availableNow drains",
+        "--log-dir", default=None, help="per-hop progress logs (one JSON line per batch)"
     )
-    pipe.add_argument("--log-dir", default=None, help="per-job lifecycle logs")
 
     q = sub.add_parser("query", help="run a registered query and show rows")
     q.add_argument("name")
@@ -328,25 +324,15 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             return 0
 
         if args.cmd == "pipeline":
-            if args.concurrent:
-                from .streaming.orchestrator import run_medallion_concurrent
+            from .streaming.jobs import run_medallion_available_now
 
-                paths = run_medallion_concurrent(
-                    spark,
-                    raw_dir=args.raw_dir,
-                    out_root=args.out_root,
-                    watermark=args.watermark,
-                    log_dir=args.log_dir,
-                )
-            else:
-                from .streaming.jobs import run_medallion_available_now
-
-                paths = run_medallion_available_now(
-                    spark,
-                    raw_dir=args.raw_dir,
-                    out_root=args.out_root,
-                    watermark=args.watermark,
-                )
+            paths = run_medallion_available_now(
+                spark,
+                raw_dir=args.raw_dir,
+                out_root=args.out_root,
+                watermark=args.watermark,
+                log_dir=args.log_dir,
+            )
             for layer, path in paths.items():
                 n = spark.read.parquet(path).count()
                 print(f"{layer}: {n} rows at {path}")

@@ -2,7 +2,7 @@
 
 The reference audits its tables with ``printSchema`` + ``count`` +
 ``DeltaTable.history()`` (``/root/reference/src/utils/check_bronze.py:52-84``).
-The history audit lives in ``plans/lakehouse.py``; this module registers
+The history audit lives in ``plans/delta.py``; this module registers
 the schema catalog (M1) and row-count audit as ordinary oracle-checked
 queries so the driver verifies them like any other operator.
 

@@ -1,90 +1,25 @@
-"""Lakehouse metadata queries (SURVEY.md M2/M3 twins), oracle-checked.
+"""Lakehouse layout queries, oracle-checked.
 
-``check_bronze.py:73-84`` audits a table by reading its Delta history
-(version / operation / mode / row counts). Here the engine builds a
-lakehouse table live — one commit per event_type batch, committed in
-sorted order so version assignment is deterministic — then queries its
-commit log. The DuckDB twin recomputes the same audit straight from
-``events``, which checks both the log contents and the append machinery.
+Two physical-layout twins whose effect on the answer is nil and whose
+effect on the plan is checked: `lineitem_zorder_keys` (the Morton codes
+behind the OPTIMIZE-ZORDER twin) and `bucketed_join_audit` (a bucketed
+fact-fact join planned with no Exchange). The Delta history and
+time-travel audits live in ``plans/delta.py``.
 """
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.lakehouse import LakehouseTable
+from ..functions.determinism import dsum as _dsum
+from ..functions.determinism import sql_dsum as _sql_dsum
+from ..operators.partitioning import write_bucketed
+from ..operators.zorder import sql_interleave, sql_scaled, with_zvalue
 from ..sources.testdata import load_table
 from .registry import register
-
-#: deterministic commit order for the audit table (one batch per type).
-_BATCH_TYPES = ("click", "error", "purchase", "signup", "view")
-
-
-def _build_audit_table(spark: SparkSession, sf_dir: str) -> LakehouseTable:
-    events = load_table(spark, sf_dir, "events")
-    table = LakehouseTable(tempfile.mkdtemp(prefix="cplake_") + "/events_by_type")
-    for etype in _BATCH_TYPES:
-        table.append(
-            events.filter(F.col("event_type") == etype).select(
-                "event_id", "ts", "user_id", "event_type", "value"
-            )
-        )
-    return table
-
-
-@register(
-    "lakehouse_history_audit",
-    oracle=f"""
-SELECT CAST(row_number() OVER (ORDER BY event_type) - 1 AS BIGINT) AS version,
-       'APPEND' AS operation,
-       'Append' AS mode,
-       count(*) AS num_output_rows
-FROM events
-WHERE event_type IN {_BATCH_TYPES!r}
-GROUP BY event_type
-""",
-    doc="DeltaTable.history() twin (check_bronze.py:76-84): build a "
-    "versioned parquet-lakehouse table with one commit per event_type, "
-    "then audit its commit log — version, operation, mode, rows per "
-    "commit. Timestamps excluded (non-deterministic).",
-    tags=("lakehouse", "metadata", "history"),
-)
-def lakehouse_history_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table = _build_audit_table(spark, sf_dir)
-    return table.history(spark).select(
-        "version", "operation", "mode", "num_output_rows"
-    )
-
-
-@register(
-    "lakehouse_time_travel_counts",
-    oracle=f"""
-SELECT event_type, count(*) AS n
-FROM events
-WHERE event_type IN {_BATCH_TYPES[:2]!r}
-GROUP BY event_type
-""",
-    doc="Time-travel read (M2): the snapshot AS OF version 1 contains "
-    "exactly the first two commits' rows; later commits are invisible. "
-    "Version pruning happens at file listing — commits 2..4 are never "
-    "scanned.",
-    tags=("lakehouse", "metadata", "time-travel"),
-)
-def lakehouse_time_travel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table = _build_audit_table(spark, sf_dir)
-    snapshot = table.read(spark, version=1)
-    return snapshot.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-
-
-from ..operators.zorder import (  # noqa: E402
-    sql_interleave,
-    sql_scaled,
-    with_zvalue,
-)
 
 
 @register(
@@ -119,11 +54,6 @@ def lineitem_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"
     )
     return with_zvalue(li, ("l_partkey", "l_suppkey"), out="zval")
-
-
-from ..functions.determinism import dsum as _dsum  # noqa: E402
-from ..functions.determinism import sql_dsum as _sql_dsum  # noqa: E402
-from ..operators.partitioning import write_bucketed  # noqa: E402
 
 
 @register(

@@ -13,9 +13,9 @@ SURVEY.md M4). Here there is exactly one factory, scale-aware:
   the same code runs at 100 TB.
 - Session timezone pinned to UTC (SURVEY.md section 7.4: ISO-8601 ``Z``
   event times must compare stably against the DuckDB oracle).
-- Delta Lake extensions are wired only when the ``delta-spark`` package is
-  importable (not present in the v1 image — SURVEY.md S2/K1 semantics are
-  then served by the parquet lakehouse fallback in ``sources/lakehouse``).
+- No Delta Lake session extension: Delta tables are read and written by
+  the engine's own log client (``sources/delta``) over plain parquet, so
+  session start pulls no extra jars (SURVEY.md S2/K1).
 """
 
 from __future__ import annotations
@@ -23,14 +23,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-try:  # pragma: no cover - absent in the v1 image
-    from delta import configure_spark_with_delta_pip
-
-    HAVE_DELTA = True
-except ImportError:  # pragma: no cover
-    configure_spark_with_delta_pip = None
-    HAVE_DELTA = False
 
 
 def default_parallelism() -> int:
@@ -85,14 +77,6 @@ def get_spark(
         # mixed state (see sources/testdata.load_table).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    if HAVE_DELTA:  # pragma: no cover
-        builder = builder.config(
-            "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"
-        ).config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
-        builder = configure_spark_with_delta_pip(builder)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -1,1 +1,1 @@
-"""Source connectors: testdata parquet, Kafka, Delta/parquet lakehouse."""
+"""Source connectors: testdata parquet, Kafka, and the Delta log client."""

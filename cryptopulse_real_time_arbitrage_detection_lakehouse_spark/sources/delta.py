@@ -16,8 +16,8 @@ Protocol subset (delta.io PROTOCOL.md, public spec):
   ``commitInfo``, ``txn``. A snapshot at version ``V`` is the replay of
   actions ``0..V``: active files = adds not later removed (keyed by path).
 - **Commits**: ``_delta_log/%020d.json``. Visibility == log-file
-  existence, exactly like the parquet-lakehouse fallback in
-  ``sources/lakehouse.py`` (Delta is where that design comes from).
+  existence: a commit is published by an atomic create of its log file,
+  so readers never see half-written data.
 - **Checkpoints**: ``_last_checkpoint`` names a parquet file holding the
   collapsed action state at some version; replay then only needs the JSON
   commits *after* it. This is what keeps snapshot construction O(tail),

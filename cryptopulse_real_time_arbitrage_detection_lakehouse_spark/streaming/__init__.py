@@ -6,8 +6,10 @@ The reference hard-wires ``readStream``/``writeStream`` into each job
 it untestable. Here every transform is a pure ``DataFrame -> DataFrame``
 function shared with the batch/oracle path, and this package adds only the
 stream plumbing around them: bounded sources for tests
-(``trigger(availableNow=True)`` drains), checkpointed append sinks, and the
-watermark policy. The pytest streaming suite proves stream==batch
+(``trigger(availableNow=True)`` drains), checkpointed append sinks, the
+watermark policy, and one pipeline runner, `run_medallion_available_now`,
+which drains the hops in turn and can log each hop's per-batch progress
+records. The pytest streaming suite proves stream==batch
 equivalence, watermark late-data semantics, and checkpoint-restart
 idempotence (SURVEY.md section 5.2.3).
 """
@@ -19,12 +21,6 @@ from .jobs import (
     run_medallion_available_now,
     silver_stream,
     venue_pair_stream_join,
-)
-from .orchestrator import (
-    JobSpec,
-    MedallionOrchestrator,
-    PipelineListener,
-    run_medallion_concurrent,
 )
 from .sinks import (
     kafka_records,
@@ -41,11 +37,7 @@ from .sources import (
 )
 
 __all__ = [
-    "JobSpec",
-    "MedallionOrchestrator",
-    "PipelineListener",
     "bronze_ingest",
-    "run_medallion_concurrent",
     "dedup_ticks_stream",
     "gold_stream",
     "kafka_raw_stream",

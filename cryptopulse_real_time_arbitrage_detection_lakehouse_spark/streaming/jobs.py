@@ -8,7 +8,8 @@ stream==batch equivalence is a testable property instead of a hope. The
 runner chains the hops with ``availableNow`` drains — the reference runs
 them as three concurrent OS processes communicating through tables
 (SURVEY.md section 3.1); sequential bounded drains give identical results
-over bounded input.
+over bounded input, since each hop's exactly-once recovery comes from its
+checkpoint and WAL whether or not the hops overlap in time.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators.gold import candles
 from ..operators.silver import parse_bronze_ticks, with_audit_column
 from ..schemas import BRONZE_SCHEMA, KAFKA_SHAPED_SCHEMA, SILVER_SCHEMA
-from .sinks import drain, start_parquet_stream
+from .sinks import drain, start_parquet_stream, write_progress_log
 from .sources import read_parquet_stream
 
 DEFAULT_WATERMARK = "10 minutes"  # gold_layer.py:56 (README claims 10s; code wins)
@@ -88,6 +89,7 @@ def run_medallion_available_now(
     out_root: str,
     watermark: str = DEFAULT_WATERMARK,
     timeout_sec: int = 300,
+    log_dir: str | None = None,
 ) -> dict[str, str]:
     """Drain raw Kafka-shaped parquet through bronze -> silver -> gold.
 
@@ -95,36 +97,33 @@ def run_medallion_available_now(
     previous hop's table — the reference's process topology, bounded. Rerun
     with the same ``out_root``: checkpoints make every hop incremental and
     idempotent (T5).
+
+    With ``log_dir`` set, each hop's drained batches are appended to
+    ``<log_dir>/<query_name>.log`` (``bronze_ingest``, ``silver_parse``,
+    ``gold_candles``) as the engine's own progress JSON, one line per
+    batch: ``durationMs`` phases, ``eventTime.watermark``,
+    ``stateOperators`` and the rates (see `write_progress_log`). The logs are read
+    from ``recentProgress``, whose 100-batch cap never bites here: no hop
+    sets ``maxFilesPerTrigger``, so each call commits one data batch per
+    hop plus at most one watermark flush batch.
     """
     paths = {layer: os.path.join(out_root, layer) for layer in ("bronze", "silver", "gold")}
     ckpt = {layer: os.path.join(out_root, "_checkpoints", layer) for layer in paths}
 
+    def hop(df: DataFrame, layer: str, query_name: str) -> None:
+        query = start_parquet_stream(
+            df, path=paths[layer], checkpoint=ckpt[layer], query_name=query_name
+        )
+        drain(query, timeout_sec)
+        if log_dir is not None:
+            write_progress_log(query, log_dir)
+
     raw = read_parquet_stream(spark, raw_dir, KAFKA_SHAPED_SCHEMA)
-    drain(
-        start_parquet_stream(
-            bronze_ingest(raw), path=paths["bronze"], checkpoint=ckpt["bronze"],
-            query_name="bronze_ingest",
-        ),
-        timeout_sec,
-    )
-
+    hop(bronze_ingest(raw), "bronze", "bronze_ingest")
     bronze = read_parquet_stream(spark, paths["bronze"], BRONZE_SCHEMA)
-    drain(
-        start_parquet_stream(
-            silver_stream(bronze), path=paths["silver"], checkpoint=ckpt["silver"],
-            query_name="silver_parse",
-        ),
-        timeout_sec,
-    )
-
+    hop(silver_stream(bronze), "silver", "silver_parse")
     silver = read_parquet_stream(spark, paths["silver"], SILVER_SCHEMA)
-    drain(
-        start_parquet_stream(
-            gold_stream(silver, watermark=watermark),
-            path=paths["gold"], checkpoint=ckpt["gold"], query_name="gold_candles",
-        ),
-        timeout_sec,
-    )
+    hop(gold_stream(silver, watermark=watermark), "gold", "gold_candles")
     return paths
 
 

@@ -1,11 +1,12 @@
 """Streaming sinks (SURVEY.md K1-K5 twins).
 
 The reference's three jobs all end in a checkpointed Delta append sink;
-delta-spark is not in this image, so the engine's durable sink is
+delta-spark is not in this image, so the medallion's durable sink is
 checkpointed **parquet append** — same exactly-once contract (offsets +
 commits WAL in the checkpoint, output files tracked in ``_spark_metadata``),
-different table format. The lakehouse fallback (``sources/lakehouse``)
-layers the version/history metadata on top.
+different table format. Where a hop needs a versioned table (history, time
+travel, MERGE), `start_delta_append_stream` and `start_merge_stream` write
+through the Delta log client in ``sources/delta``.
 
 The Kafka producer sink (K4, the outbound twin of the reference's
 producer ``/root/reference/src/producers/main.py:46-55``) is split into a
@@ -16,6 +17,7 @@ the classpath to actually run.
 
 from __future__ import annotations
 
+import os
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -236,3 +238,21 @@ def drain(query: StreamingQuery, timeout_sec: int = 300) -> None:
     err = query.exception()
     if err is not None:
         raise err
+
+
+def write_progress_log(query: StreamingQuery, log_dir: str) -> None:
+    """Append a drained query's progress records to
+    ``<log_dir>/<query name>.log``, one compact JSON line per batch.
+
+    Each line is the engine's own ``StreamingQueryProgress``: the
+    ``durationMs`` phases, ``eventTime.watermark``, ``stateOperators``,
+    ``observedMetrics`` and the rates (Spark leaves NaN rates out). They
+    are read from ``recentProgress``, so no listener is involved; that
+    history holds the last ``spark.sql.streaming.numRecentProgressUpdates``
+    (100 by default) batches.
+    """
+    os.makedirs(log_dir, exist_ok=True)
+    path = os.path.join(log_dir, f"{query.name or query.id}.log")
+    with open(path, "a", encoding="utf-8") as fh:
+        for p in query.recentProgress:
+            fh.write(p.json + "\n")

@@ -3,6 +3,8 @@ list/query/pipeline must work against an injected session."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.cli import main
@@ -31,15 +33,29 @@ class TestCli:
 
     def test_pipeline_sequential(self, spark, tmp_path, capsys):
         raw = str(tmp_path / "raw")
+        log_dir = tmp_path / "logs"
         make_raw_ticks(spark, n=120).write.parquet(raw)
         rc = main(
-            ["pipeline", "--raw-dir", raw, "--out-root", str(tmp_path / "out")],
+            [
+                "pipeline", "--raw-dir", raw, "--out-root", str(tmp_path / "out"),
+                "--log-dir", str(log_dir),
+            ],
             spark=spark,
         )
         assert rc == 0
         out = capsys.readouterr().out
         assert "bronze: 120 rows" in out and "silver: 120 rows" in out
         assert "gold:" in out
+
+        # --log-dir: each hop's per-batch progress records, as JSON lines
+        logs = {}
+        for name in ("bronze_ingest", "silver_parse", "gold_candles"):
+            lines = (log_dir / f"{name}.log").read_text().splitlines()
+            logs[name] = [json.loads(line) for line in lines]
+            assert any("addBatch" in r["durationMs"] for r in logs[name]), name
+        gold = next(r for r in logs["gold_candles"] if r["numInputRows"])
+        assert gold["stateOperators"]
+        assert "watermark" in gold["eventTime"]
 
 
 def test_query_catalog_is_current():

@@ -5,6 +5,7 @@ dedup — the properties the DuckDB oracle cannot check.
 
 from __future__ import annotations
 
+import json
 import os
 from datetime import datetime, timezone
 from decimal import Decimal
@@ -21,7 +22,11 @@ from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.operators.dedup i
 from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.operators.gold import (
     candles,
 )
+from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.operators.observability import (
+    observe_stream,
+)
 from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.schemas import (
+    KAFKA_SHAPED_SCHEMA,
     SILVER_SCHEMA,
 )
 from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.streaming import (
@@ -37,6 +42,7 @@ from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.streaming import 
 from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.streaming.sinks import (
     drain,
     scoped_shuffle_partitions,
+    write_progress_log,
 )
 
 
@@ -114,6 +120,15 @@ def read_out(spark, path):
     return spark.read.schema(None or spark.read.parquet(path).schema).parquet(path)
 
 
+def read_sorted(spark, path):
+    """A layer's rows as sorted string tuples, less bronze's wall-clock
+    ``ingest_ts`` audit column."""
+    df = spark.read.parquet(path)
+    return sorted(
+        tuple(str(v) for v in row) for row in df.drop("ingest_ts").collect()
+    )
+
+
 class TestMedallionStreamEqualsBatch:
     def test_full_pipeline_matches_batch(self, spark, tmp_path):
         """availableNow drain of raw->bronze->silver->gold equals running the
@@ -159,13 +174,73 @@ class TestMedallionStreamEqualsBatch:
         assert bronze.count() == raw.count()
 
     def test_rerun_is_idempotent(self, spark, tmp_path):
-        """T5: re-draining with the same checkpoints adds nothing."""
+        """T5: re-draining with the same checkpoints replays nothing —
+        every hop resumes from its checkpoint, finds no new files, and
+        bronze, silver and gold are row-for-row what the first run wrote."""
         raw_dir, out_root = str(tmp_path / "raw"), str(tmp_path / "out")
-        make_raw_ticks(spark, n=100).write.parquet(raw_dir)
+        # 400 ticks span 20 event-minutes, so the 10-minute watermark
+        # finalizes about half the gold windows
+        make_raw_ticks(spark, n=400).write.parquet(raw_dir)
         paths = run_medallion_available_now(spark, raw_dir=raw_dir, out_root=out_root)
-        first = spark.read.parquet(paths["gold"]).count()
+        first = {layer: read_sorted(spark, p) for layer, p in paths.items()}
+        assert len(first["gold"]) > 0
         paths = run_medallion_available_now(spark, raw_dir=raw_dir, out_root=out_root)
-        assert spark.read.parquet(paths["gold"]).count() == first
+        assert {layer: read_sorted(spark, p) for layer, p in paths.items()} == first
+
+
+class TestDrain:
+    def test_failed_hop_surfaces_through_drain(self, spark, tmp_path):
+        """A hop whose batch function raises fails the drain with that
+        exception, and the failed query is not left running."""
+        raw_dir = str(tmp_path / "raw")
+        make_raw_ticks(spark, n=50).write.parquet(raw_dir)
+
+        def boom(batch_df, batch_id):
+            raise RuntimeError("hop crash")
+
+        q = (
+            read_parquet_stream(spark, raw_dir, KAFKA_SHAPED_SCHEMA)
+            .writeStream.foreachBatch(boom)
+            .queryName("crashing_hop")
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        with pytest.raises(Exception, match="hop crash"):
+            drain(q, 120)
+        assert not q.isActive
+        assert not [a for a in spark.streams.active if a.id == q.id]
+
+    def test_progress_log_reconciles_with_observe_counters(self, spark, tmp_path):
+        """A drained query's JSON progress log and its observe() audit metrics
+        are two views of one execution: every batch's observedMetrics
+        lands in the log, and their sum equals both the logged input rows
+        and the rows actually written."""
+        raw_dir = str(tmp_path / "raw")
+        make_raw_ticks(spark, n=60).write.parquet(raw_dir)
+        out, log_dir = str(tmp_path / "out"), str(tmp_path / "logs")
+        audited = observe_stream(
+            read_parquet_stream(spark, raw_dir, KAFKA_SHAPED_SCHEMA),
+            "ingest_audit",
+            {"n_rows": F.count(F.lit(1))},
+        )
+        q = start_parquet_stream(
+            audited, path=out, checkpoint=str(tmp_path / "ck"), query_name="audited_job"
+        )
+        drain(q, 120)
+        write_progress_log(q, log_dir)
+
+        with open(os.path.join(log_dir, "audited_job.log")) as fh:
+            records = [json.loads(line) for line in fh]
+        assert records
+        observed_total = sum(
+            r["observedMetrics"]["ingest_audit"]["n_rows"]
+            for r in records
+            if r.get("observedMetrics")
+        )
+        input_total = sum(r["numInputRows"] for r in records)
+        written = spark.read.parquet(out).count()
+        assert observed_total == written == input_total == 60
 
 
 class TestWatermarkSemantics:
@@ -874,6 +949,19 @@ class TestTransactionalDeltaSink:
         q.awaitTermination(120)
         t = DeltaTable(table_path)
         assert t.read(spark).count() == 50
+        # a restart from the same checkpoint finds no new files and
+        # commits nothing
+        v_before = t.latest_version()
+        drain(
+            start_delta_append_stream(
+                spark.readStream.schema("id long, g long").parquet(src),
+                table_path=table_path,
+                checkpoint=str(tmp_path / "ck"),
+                app_id="sink-test",
+            ),
+            120,
+        )
+        assert t.latest_version() == v_before
         # simulate the crash-replay: re-commit batch 0's data with the
         # same (app_id, batch_id) — the log-recorded txn makes it a no-op
         replay = spark.range(0, 50).selectExpr("id", "id % 5 AS g")
