@@ -479,50 +479,6 @@ def pyds_stream_where_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "pyds_delta_write_roundtrip",
-    oracle=f"""
-SELECT event_type, count(*) AS n,
-       {sql_dsum("value")} AS total_value
-FROM events
-WHERE event_type IN {_BATCH_TYPES!r}
-GROUP BY event_type
-""",
-    doc="The pydelta WRITE path end to end: "
-    "df.write.format('pydelta').partitionBy(event_type) stages one "
-    "parquet file per partition tuple per task on the EXECUTORS "
-    "(arrow batches, footer stats computed there) and the driver "
-    "publishes ONE atomic Delta commit from the collected add "
-    "payloads — all-or-nothing visibility, the v2-writer contract. "
-    "The read-back goes through the log client and re-aggregates; the "
-    "oracle recomputes from events. Green certifies staging, "
-    "partition encoding, stats, and the commit protocol agree with "
-    "the reader.",
-    tags=("delta", "python-datasource", "write", "partitioned"),
-)
-def pyds_delta_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources import pyds
-
-    pyds.register(spark)
-    events = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin(*_BATCH_TYPES)
-    )
-    root = tempfile.mkdtemp(prefix="cppydsw_") + "/events_delta"
-    (
-        events.select(*_EVENT_COLS)
-        .repartition(4)
-        .write.format("pydelta")
-        .option("path", root)
-        .option("partitionBy", "event_type")
-        .mode("append")
-        .save()
-    )
-    t = DeltaTable(root).read(spark)
-    return t.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"), dsum("value").alias("total_value")
-    )
-
-
-@register(
     "delta_generated_date_partition",
     oracle=f"""
 SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS event_date,

@@ -657,6 +657,29 @@ def _arrow_to_logical_names(arr, dt: T.DataType):
     )
 
 
+def _spark_to_arrow_type(dt: T.DataType):
+    """Arrow type for a Spark type, or None when no cast should be
+    attempted (complex/unknown types pass through as read)."""
+    import pyarrow as pa
+
+    if isinstance(dt, T.DecimalType):
+        return pa.decimal128(dt.precision, dt.scale)
+    return {
+        T.LongType(): pa.int64(),
+        T.IntegerType(): pa.int32(),
+        T.DoubleType(): pa.float64(),
+        T.FloatType(): pa.float32(),
+        T.StringType(): pa.string(),
+        T.BooleanType(): pa.bool_(),
+        T.DateType(): pa.date32(),
+        # Spark's Arrow bridge rejects NANOSECOND timestamps (the unit
+        # pyarrow reads from ns-precision parquet): microseconds is the
+        # engine's timestamp unit
+        T.TimestampType(): pa.timestamp("us", tz="UTC"),
+        T.TimestampNTZType(): pa.timestamp("us"),
+    }.get(dt)
+
+
 def _assign_mapping_meta(type_json, next_id: int, name_fn):
     """Walk a Delta schema-JSON *type* and stamp every nested struct field
     with ``delta.columnMapping.id`` / ``physicalName`` metadata. ``name_fn``
@@ -1742,8 +1765,8 @@ class DeltaTable:
                 # (merge_schema / MERGE with_schema_evolution): request
                 # only what the footer has and NULL-fill the rest —
                 # requesting a missing column crashes the read, where
-                # Delta semantics say NULL (same contract as the pyds
-                # kernel)
+                # Delta semantics say NULL (same contract as the
+                # pydelta reader)
                 present = set(pq.read_schema(fp).names)
                 tbl = pq.read_table(
                     fp,
@@ -1770,7 +1793,6 @@ class DeltaTable:
             if shred_structs:
                 import pyarrow as pa
 
-                from .pyds import _spark_to_arrow_type
                 from .shredding import _is_shredded_layout, unshred_struct_array
 
                 for i, c in enumerate(data_cols):
@@ -5771,7 +5793,7 @@ class DeltaTable:
         log-tail fixtures: build the multi-commit base ONCE per
         session, fork per query for the cost of rewriting a few KB of
         JSON instead of re-running every Spark write (the round-9
-        bench's `pyds_*_cdf_audit` lines were ~60% fixture build).
+        bench's change-feed audit lines were ~60% fixture build).
 
         Requires an all-JSON log (no checkpoints or minor compactions
         yet): those carriers hold reconciled STATE whose embedded

@@ -20,22 +20,22 @@ instead of around it:
   by row position, renames physical->logical columns (column mapping),
   and injects typed partition values.
 
-The source is four-way: batch read (`PyDeltaReader`), LOG-TAILING
-streaming read (`PyDeltaStreamReader` — offsets are log versions,
-exactly-once recovery from the checkpointed version, streams
-partitioned AND column-mapped tables), batch write (`PyDeltaBatchWriter`
-— executors stage parquet + stats, the driver publishes one atomic
-commit), and a TRANSACTIONAL streaming sink (`PyDeltaStreamWriter` —
-``txn``-keyed micro-batch commits, replays detected in the log).
+The source is read-only, with two surfaces: batch read
+(`PyDeltaReader`, including batch change data feed and shredded-variant
+reads) and LOG-TAILING streaming read (`PyDeltaStreamReader` — offsets
+are log versions, exactly-once recovery from the checkpointed version;
+it streams partitioned and column-mapped tables, the change data feed,
+``ignoreDeletes``/``skipChangeCommits`` and rate limits). Writes go through
+`DeltaTable.write` and the txn-keyed `start_delta_append_stream` sink;
+a batch or streaming write to the "pydelta" format fails as it starts,
+because the source defines no writer.
 
-Options: ``path`` (table root, required); reads: ``versionAsOf``,
+Options: ``path`` (table root, required), ``versionAsOf``,
 ``timestampAsOf`` (ms epoch), ``where`` (simple-conjunction predicate
 for file pruning + exact row filtering — batch, batch-CDF, and
 STREAMING, where data commits also stats-prune and CDF batches
-row-filter only), ``startingVersion`` (streaming); writes:
-``partitionBy`` (comma-separated), ``txnAppId`` (streaming-sink
-idempotence key). Register once per session with
-``pyds.register(spark)``.
+row-filter only), ``startingVersion`` (streaming and CDF). Register
+once per session with ``pyds.register(spark)``.
 
 Scale notes: the JVM parquet path remains the default for raw scan
 throughput (vectorized reader, codegen); this source is the
@@ -46,7 +46,6 @@ dominated by Python anyway, or testing reader semantics in-process.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import urllib.parse
@@ -55,26 +54,22 @@ from typing import Iterator
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
     InputPartition,
-    WriterCommitMessage,
 )
 
 from . import dv as _dv
 from .shredding import _is_shredded_layout, unshred_struct_array
 from .delta import (
-    ConcurrentWriteError,
     DeltaTable,
     _phys_path_fn,
     _as_dict,
-    _file_stats,
     _arrow_names_differ,
     _arrow_to_logical_names,
     _file_may_match,
     _parse_conjuncts_strict,
+    _spark_to_arrow_type,
     _HIVE_NULL,
 )
 
@@ -198,29 +193,6 @@ def _coerce_partition_value(raw, dt: T.DataType):
         f"partition column type {dt.simpleString()} is not supported by the "
         "pydelta source"
     )
-
-
-def _spark_to_arrow_type(dt: T.DataType):
-    """Arrow type for a Spark type, or None when no cast should be
-    attempted (complex/unknown types pass through as read)."""
-    import pyarrow as pa
-
-    if isinstance(dt, T.DecimalType):
-        return pa.decimal128(dt.precision, dt.scale)
-    return {
-        T.LongType(): pa.int64(),
-        T.IntegerType(): pa.int32(),
-        T.DoubleType(): pa.float64(),
-        T.FloatType(): pa.float32(),
-        T.StringType(): pa.string(),
-        T.BooleanType(): pa.bool_(),
-        T.DateType(): pa.date32(),
-        # Spark's Arrow bridge rejects NANOSECOND timestamps (the unit
-        # pyarrow reads from ns-precision parquet): microseconds is the
-        # engine's timestamp unit
-        T.TimestampType(): pa.timestamp("us", tz="UTC"),
-        T.TimestampNTZType(): pa.timestamp("us"),
-    }.get(dt)
 
 
 def _resolve_version(table: DeltaTable, opts: dict) -> int | None:
@@ -1098,592 +1070,6 @@ class PyDeltaStreamReader(DataSourceStreamReader):
             )
 
 
-# ------------------------------------------------------------------ writes
-
-
-class PyDeltaCommitMessage(WriterCommitMessage):
-    """Per-task result: the add-file payloads this task staged."""
-
-    def __init__(self, adds: list[dict]) -> None:
-        self.adds = adds
-
-
-def _contains_struct(type_json) -> bool:
-    if not isinstance(type_json, dict):
-        return False
-    if type_json.get("type") == "struct":
-        return True
-    if type_json.get("type") == "array":
-        return _contains_struct(type_json.get("elementType"))
-    if type_json.get("type") == "map":
-        return _contains_struct(type_json.get("keyType")) or _contains_struct(
-            type_json.get("valueType")
-        )
-    return False
-
-
-def _phys_field_meta(md: dict, id_mode: bool) -> dict | None:
-    if not id_mode:
-        return None
-    fid = md.get("delta.columnMapping.id")
-    return (
-        {b"PARQUET:field_id": str(fid).encode()} if fid is not None else None
-    )
-
-
-def _phys_array(arr, type_json, id_mode: bool):
-    """Rebuild an arrow array with struct fields renamed logical ->
-    PHYSICAL at every depth (and, id mode, parquet field ids stamped) —
-    the write-direction twin of `delta._arrow_to_logical_names`. Struct
-    children resolve BY LOGICAL NAME from the incoming frame (the
-    schema-match validation already pinned names and order); structs
-    inside ARRAY/MAP elements rebuild around the container's own
-    validity/offset buffers, mirroring the read-direction rebuild —
-    zero row data copied."""
-    import pyarrow as pa
-
-    if not isinstance(type_json, dict):
-        return arr
-    t = type_json.get("type")
-    if t == "struct":
-        children, fields = [], []
-        for f in type_json.get("fields", []):
-            md = f.get("metadata") or {}
-            child = _phys_array(
-                arr.field(f["name"]), f["type"], id_mode
-            )
-            children.append(child)
-            fields.append(
-                pa.field(
-                    md.get("delta.columnMapping.physicalName", f["name"]),
-                    child.type,
-                    nullable=True,
-                    metadata=_phys_field_meta(md, id_mode),
-                )
-            )
-        mask = None
-        if arr.null_count:
-            import pyarrow.compute as pc
-
-            mask = pc.is_null(arr)
-        return pa.StructArray.from_arrays(children, fields=fields, mask=mask)
-    if t == "array" and _contains_struct(type_json.get("elementType")) and (
-        pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type)
-    ):
-        values = _phys_array(arr.values, type_json["elementType"], id_mode)
-        ef = arr.type.value_field
-        mk = pa.large_list if pa.types.is_large_list(arr.type) else pa.list_
-        new_type = mk(pa.field(ef.name, values.type, nullable=ef.nullable))
-        return pa.Array.from_buffers(
-            new_type,
-            len(arr),
-            arr.buffers()[:2],
-            offset=arr.offset,
-            children=[values],
-        )
-    if t == "map" and pa.types.is_map(arr.type) and (
-        _contains_struct(type_json.get("keyType"))
-        or _contains_struct(type_json.get("valueType"))
-    ):
-        keys = _phys_array(arr.keys, type_json["keyType"], id_mode)
-        items = _phys_array(arr.items, type_json["valueType"], id_mode)
-        new_type = pa.map_(keys.type, items.type)
-        entries = pa.StructArray.from_arrays(
-            [keys, items],
-            fields=[
-                pa.field("key", keys.type, nullable=False),
-                pa.field("value", items.type, nullable=True),
-            ],
-        )
-        return pa.Array.from_buffers(
-            new_type,
-            len(arr),
-            arr.buffers()[:2],
-            offset=arr.offset,
-            children=[entries],
-        )
-    return arr
-
-
-def _physical_table(tbl, schema_json: dict, id_mode: bool):
-    """The whole-table form of `_phys_array`: every column lands under
-    its physical name with physical nested fields (+ field ids in id
-    mode), ready for `pq.write_table` — the staged footer then matches
-    what the mapped readers (Spark positional cast, `to_pandas`,
-    pydelta) resolve."""
-    import pyarrow as pa
-
-    cols, fields = [], []
-    for f in schema_json["fields"]:
-        md = f.get("metadata") or {}
-        arr = tbl.column(f["name"]).combine_chunks()
-        out = _phys_array(arr, f["type"], id_mode)
-        cols.append(out)
-        fields.append(
-            pa.field(
-                md.get("delta.columnMapping.physicalName", f["name"]),
-                out.type,
-                nullable=True,
-                metadata=_phys_field_meta(md, id_mode),
-            )
-        )
-    return pa.Table.from_arrays(cols, schema=pa.schema(fields))
-
-
-def _check_constraint_violations(tbl, conjuncts) -> int:
-    """Rows where the ANDed conjuncts evaluate FALSE — SQL CHECK
-    semantics: a NULL comparison passes (Kleene), only a definite
-    False violates."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    mask = None
-    for col, op, val in conjuncts:
-        arr = tbl.column(col)
-        cmp = {
-            "=": pc.equal,
-            "<": pc.less,
-            "<=": pc.less_equal,
-            ">": pc.greater,
-            ">=": pc.greater_equal,
-        }[op](arr, pa.scalar(val))
-        mask = cmp if mask is None else pc.and_kleene(mask, cmp)
-    if mask is None:
-        return 0
-    return pc.sum(
-        pc.fill_null(pc.invert(mask.combine_chunks()), False)
-    ).as_py() or 0
-
-
-def _write_task_files(
-    batches, root: str, partition_by: list[str],
-    mapping_spec: tuple[str, bool] | None = None,
-    constraints: list[tuple[str, list]] | None = None,
-) -> list[dict]:
-    """Executor-side: write this task's arrow batches as parquet data
-    files DIRECTLY under the table root (Delta visibility == log
-    membership, so there is no rename dance — an uncommitted file is
-    invisible and vacuum reaps it) and return their ``add`` payloads.
-    Partitioned tables get one file per partition tuple in this task,
-    under the hive directory layout the batch reader expects.
-    ``mapping_spec`` = (table schemaString, id_mode) for column-mapped
-    targets: applied before anything touches disk, so file columns
-    (nested struct fields included), footer stats keys, partitionValues
-    keys, and hive directory segments are all PHYSICAL names — and in
-    id mode every field carries its parquet field id."""
-    import json
-    import time
-    import uuid as _uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    batches = list(batches)
-    if not batches:
-        return []
-    tbl = pa.Table.from_batches(batches)
-    for cname, conjs in constraints or []:
-        n_bad = _check_constraint_violations(tbl, conjs)
-        if n_bad:
-            raise ValueError(
-                f"CHECK constraint {cname!r} violated by {n_bad} row(s) "
-                "in this write (validated executor-side; nothing was "
-                "committed)"
-            )
-    if mapping_spec is not None:
-        schema_json = json.loads(mapping_spec[0])
-        tbl = _physical_table(tbl, schema_json, mapping_spec[1])
-        rename = {
-            f["name"]: (f.get("metadata") or {}).get(
-                "delta.columnMapping.physicalName", f["name"]
-            )
-            for f in schema_json["fields"]
-        }
-        partition_by = [rename.get(c, c) for c in partition_by]
-    now_ms = int(time.time() * 1000)
-    adds: list[dict] = []
-
-    def write_one(sub, rel_dir: str, part_values: dict) -> None:
-        fname = f"part-{_uuid.uuid4().hex}.parquet"
-        rel = f"{rel_dir}/{fname}" if rel_dir else fname
-        dst = os.path.join(root, rel)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        data = sub.drop_columns(partition_by) if partition_by else sub
-        pq.write_table(data, dst)
-        adds.append(
-            {
-                "path": urllib.parse.quote(rel, safe="/="),
-                "partitionValues": part_values,
-                "size": os.path.getsize(dst),
-                "modificationTime": now_ms,
-                "dataChange": True,
-                "stats": json.dumps(_file_stats(pq.ParquetFile(dst).metadata)),
-            }
-        )
-
-    if not partition_by:
-        write_one(tbl, "", {})
-        return adds
-    cols = [tbl.column(c).to_pylist() for c in partition_by]
-    groups: dict[tuple, list[int]] = {}
-    for i, vals in enumerate(zip(*cols)):
-        groups.setdefault(vals, []).append(i)
-    for vals, idxs in sorted(groups.items(), key=lambda kv: str(kv[0])):
-        sub = tbl.take(pa.array(idxs, type=pa.int64()))
-        segs, pv = [], {}
-        for c, v in zip(partition_by, vals):
-            if v is None:
-                segs.append(f"{c}={_HIVE_NULL}")
-                pv[c] = None
-            else:
-                text = str(v)
-                segs.append(f"{c}={urllib.parse.quote(text, safe='')}")
-                pv[c] = text
-        write_one(sub, "/".join(segs), pv)
-    return adds
-
-
-def _commit_written(
-    root: str,
-    messages,
-    *,
-    schema: T.StructType,
-    partition_by: list[str],
-    overwrite: bool,
-    txn: tuple[str, int] | None,
-) -> None:
-    """Driver-side commit of the adds every task staged. With ``txn``
-    (the streaming sink), a replayed batch is detected IN THE LOG and
-    its staged files are deleted instead of committed — the delta-spark
-    streaming-sink exactly-once protocol. A lost commit race on an
-    APPEND retries against the new tail iff the interleaved commits are
-    themselves pure appends (the JVM write path's blind-append rule —
-    per attempt the version, txn replay check, and row-tracking ranges
-    all re-derive against the fresh tail); overwrites and non-append
-    interleavings surface `ConcurrentWriteError`, and the staged files
-    are then orphans that `vacuum` reaps (same recovery story as a
-    crashed writer)."""
-    import json
-    import time
-    import uuid as _uuid
-
-    adds = [a for m in messages if m is not None for a in m.adds]
-    table = DeltaTable(root)
-
-    def discard_staged() -> None:
-        for a in adds:
-            fp = os.path.join(root, urllib.parse.unquote(a["path"]))
-            if os.path.exists(fp):
-                os.remove(fp)
-
-    n_rows = sum(json.loads(a["stats"])["numRecords"] for a in adds)
-    for _attempt in range(20):
-        last = table.latest_version()
-        if txn is not None and last is not None:
-            applied = table.last_txn_version(txn[0])
-            if applied is not None and applied >= txn[1]:
-                discard_staged()  # replayed batch: table unchanged
-                return
-        now_ms = int(time.time() * 1000)
-        version = 0 if last is None else last + 1
-        actions: list[dict] = []
-        if txn is not None:
-            actions.append(
-                {
-                    "txn": {
-                        "appId": txn[0],
-                        "version": txn[1],
-                        "lastUpdated": now_ms,
-                    }
-                }
-            )
-        actions.append(
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "WRITE",
-                    "operationParameters": {
-                        "mode": "Overwrite" if overwrite else "Append"
-                    },
-                    "operationMetrics": {
-                        "numFiles": str(len(adds)),
-                        "numOutputRows": str(n_rows),
-                    },
-                }
-            }
-        )
-        if version == 0:
-            actions.append(
-                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
-            )
-            actions.append(
-                {
-                    "metaData": {
-                        "id": _uuid.uuid4().hex,
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": schema.json(),
-                        "partitionColumns": partition_by,
-                        "configuration": {},
-                        "createdTime": now_ms,
-                    }
-                }
-            )
-        if overwrite and last is not None:
-            _meta, prior_adds = table._snapshot_state(None)
-            for a in prior_adds:
-                actions.append(
-                    {
-                        "remove": {
-                            "path": a["path"],
-                            "deletionTimestamp": now_ms,
-                            "dataChange": True,
-                        }
-                    }
-                )
-        if last is not None:
-            meta_rt, _a, _p, domains = table._snapshot_state_full(
-                None, with_domains=True
-            )
-            if DeltaTable._row_tracking_enabled(meta_rt):
-                # spec writer duty on row-tracking tables: every add
-                # carries a fresh baseRowId range and the same commit
-                # advances the high-water-mark domain (stable ids derive
-                # as baseRowId + position); re-stamped per attempt so a
-                # retry allocates above the WINNER's ranges
-                hwm = table._stamp_fresh_row_ids(
-                    adds, DeltaTable._rt_hwm(domains), version
-                )
-                actions.append(DeltaTable._rt_domain_action(hwm))
-        actions.extend({"add": a} for a in adds)
-        try:
-            table._publish_or_conflict(version, actions, "WRITE")
-            return
-        except ConcurrentWriteError:
-            if overwrite:
-                discard_staged()
-                raise
-            latest = table.latest_version()
-            for v2 in range(version, (latest or 0) + 1):
-                for action in table._read_commit(v2):
-                    if any(
-                        k in action
-                        for k in ("metaData", "protocol", "remove")
-                    ):
-                        discard_staged()
-                        raise ConcurrentWriteError(
-                            f"pydelta append on {root} conflicts with a "
-                            f"concurrent non-append commit at version "
-                            f"{v2}; rerun from a fresh snapshot"
-                        )
-            # pure-append tail: rebuild against it and retry
-        except Exception:
-            discard_staged()
-            raise
-    discard_staged()
-    raise ConcurrentWriteError(
-        f"pydelta append on {root} lost {20} consecutive commit races"
-    )
-
-
-def _validate_write_target(
-    root: str, schema: T.StructType, partition_by: list[str],
-    *, overwrite: bool = False,
-) -> tuple[tuple[str, bool] | None, list[tuple[str, list]]]:
-    """Fail fast ON THE DRIVER before any task runs: schema and
-    partitioning must match an existing table exactly (the pydelta write
-    path has no evolution support — `DeltaTable.write` does), and
-    partition columns must exist in the frame. The same protocol gates
-    every DeltaTable mutation enforces apply here too: a table fenced by
-    a writer feature this client does not implement refuses the write,
-    and an overwrite of a delta.appendOnly table is refused (it would
-    silently remove every prior file). Returns the
-    (schemaString, id_mode) mapping spec for column-mapped targets
-    (None otherwise); the staging tasks apply it so file columns at
-    every struct depth, stats, partitionValues, and hive dirs land
-    under physical names — with parquet field ids in id mode."""
-    if DeltaTable._has_variant(schema):
-        raise NotImplementedError(
-            "the pydelta writers cannot stage VARIANT columns (pyarrow "
-            "has no parquet VARIANT encoder); use DeltaTable.write"
-        )
-    for c in partition_by:
-        if c not in schema.fieldNames():
-            raise ValueError(
-                f"partition column {c!r} not in schema {schema.fieldNames()}"
-            )
-    table = DeltaTable(root)
-    if table.latest_version() is None:
-        return None, []
-    meta, _, protocol = table._snapshot_state_full(None)
-    DeltaTable._refuse_unknown_writer_features(protocol, "pydelta WRITE")
-    if overwrite:
-        DeltaTable._refuse_if_append_only(meta, "pydelta overwrite WRITE")
-    mapping_spec: tuple[str, bool] | None = None
-    mode = DeltaTable._mapping_mode(meta)
-    if mode in ("name", "id"):
-        # struct fields inside ARRAY/MAP elements rename too: both
-        # rebuild directions now recurse through list/map children
-        # (delta._arrow_to_logical_names / _phys_array), so no gate
-        mapping_spec = (meta["schemaString"], mode == "id")
-    conf = meta.get("configuration") or {}
-    constraints: list[tuple[str, list]] = []
-    for k in sorted(conf):
-        if not k.startswith("delta.constraints."):
-            continue
-        expr = conf[k]
-        try:
-            conjs = _parse_conjuncts_strict(expr)
-        except Exception:
-            raise NotImplementedError(
-                f"pydelta writes validate only simple-conjunction CHECK "
-                f"constraints (col OP literal AND ...); {k!r} = {expr!r} "
-                "does not decompose — a non-validating write would "
-                "silently break the invariant; use DeltaTable.write"
-            ) from None
-        constraints.append((k[len("delta.constraints."):], conjs))
-    if DeltaTable._generation_exprs(meta):
-        raise NotImplementedError(
-            "pydelta writes to tables with GENERATED columns are not "
-            "supported (this writer neither computes nor validates "
-            "generation expressions); use DeltaTable.write"
-        )
-    # row-tracked targets are supported: _commit_written stamps fresh
-    # baseRowId ranges on the staged adds and bumps the high-water-mark
-    # domain in the same commit (the spec's writer duty)
-    prior = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    strip = DeltaTable._strip_meta
-    if [
-        (f.name, strip(f.dataType)) for f in prior.fields
-    ] != [(f.name, strip(f.dataType)) for f in schema.fields]:
-        raise ValueError(
-            f"schema mismatch: table has {prior.simpleString()}, "
-            f"write has {schema.simpleString()} (pydelta writes do not "
-            "evolve schemas; use DeltaTable.write(merge_schema=True))"
-        )
-    table_parts = meta.get("partitionColumns") or []
-    if partition_by != table_parts:
-        raise ValueError(
-            f"partitionBy {partition_by} != table's {table_parts}"
-        )
-    return mapping_spec, constraints
-
-
-def _opt_partition_by(opts: dict) -> list[str]:
-    return [c.strip() for c in opts.get("partitionby", "").split(",") if c.strip()]
-
-
-class PyDeltaBatchWriter(DataSourceArrowWriter):
-    """``df.write.format("pydelta")`` — append or overwrite, committed
-    as ONE Delta transaction after every task reports its staged files
-    (all-or-nothing: a failed task aborts and the staged files are
-    removed; readers never observe a partial write)."""
-
-    def __init__(
-        self, options: dict, schema: T.StructType, overwrite: bool
-    ) -> None:
-        opts = _lower_opts(options)
-        self._root = opts["path"]
-        self._overwrite = overwrite
-        self._partition_by = _opt_partition_by(opts)
-        self._schema = schema
-        self._mapspec, self._constraints = _validate_write_target(
-            self._root, schema, self._partition_by, overwrite=overwrite
-        )
-
-    def write(self, iterator) -> PyDeltaCommitMessage:
-        return PyDeltaCommitMessage(
-            _write_task_files(
-                iterator, self._root, self._partition_by, self._mapspec,
-                self._constraints,
-            )
-        )
-
-    def commit(self, messages) -> None:
-        _commit_written(
-            self._root,
-            messages,
-            schema=self._schema,
-            partition_by=self._partition_by,
-            overwrite=self._overwrite,
-            txn=None,
-        )
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            if m is None:
-                continue
-            for a in m.adds:
-                fp = os.path.join(self._root, urllib.parse.unquote(a["path"]))
-                if os.path.exists(fp):
-                    os.remove(fp)
-
-
-class PyDeltaStreamWriter(DataSourceStreamArrowWriter):
-    """``df.writeStream.format("pydelta")`` — the TRANSACTIONAL Delta
-    streaming sink through the sanctioned API: every micro-batch commits
-    with a ``txn`` action keyed (``txnAppId`` option, batchId), so a
-    batch replayed after a crash between the Delta commit and the
-    streaming checkpoint is detected in the log and skipped —
-    exactly-once without foreachBatch. ``txnAppId`` defaults to a value
-    DERIVED FROM THE CHECKPOINT LOCATION (delta-spark's sink keys on the
-    per-query checkpoint the same way): a shared constant default would
-    make two independent streams appending to the same table share the
-    (appId, batchId) dedupe key, so whichever stream's batchId lagged
-    would see its commits skipped as replays — silent data loss. With no
-    checkpoint in the options either, the option is required."""
-
-    def __init__(self, options: dict, schema: T.StructType) -> None:
-        opts = _lower_opts(options)
-        self._root = opts["path"]
-        self._partition_by = _opt_partition_by(opts)
-        self._schema = schema
-        app_id = opts.get("txnappid")
-        if app_id is None:
-            ckpt = opts.get("checkpointlocation")
-            if ckpt:
-                app_id = "pydelta-stream-" + hashlib.sha256(
-                    os.path.abspath(ckpt).encode("utf-8")
-                ).hexdigest()[:16]
-            else:
-                raise ValueError(
-                    "pydelta streaming sink needs an idempotence key "
-                    "unique to this query: set .option('txnAppId', ...) "
-                    "(no checkpointLocation option was visible to derive "
-                    "one from)"
-                )
-        self._app_id = app_id
-        self._mapspec, self._constraints = _validate_write_target(
-            self._root, schema, self._partition_by
-        )
-
-    def write(self, iterator) -> PyDeltaCommitMessage:
-        return PyDeltaCommitMessage(
-            _write_task_files(
-                iterator, self._root, self._partition_by, self._mapspec,
-                self._constraints,
-            )
-        )
-
-    def commit(self, messages, batchId: int) -> None:
-        _commit_written(
-            self._root,
-            messages,
-            schema=self._schema,
-            partition_by=self._partition_by,
-            overwrite=False,
-            txn=(self._app_id, batchId),
-        )
-
-    def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is None:
-                continue
-            for a in m.adds:
-                fp = os.path.join(self._root, urllib.parse.unquote(a["path"]))
-                if os.path.exists(fp):
-                    os.remove(fp)
-
-
 def register(spark) -> None:
     """Register the source with a session: ``spark.read.format("pydelta")``.
 
@@ -1721,12 +1107,6 @@ class PyDeltaDataSource(DataSource):
     def schema(self) -> T.StructType:
         opts = _lower_opts(self.options)
         table = DeltaTable(opts["path"])
-        if table.latest_version() is None:
-            # a WRITE target that does not exist yet: the framework still
-            # asks for a schema, but the writer takes the frame's own —
-            # report empty rather than failing the whole write plan
-            self._snapshot = None
-            return T.StructType([])
         # resolve at the TRAVELED version: a schema-evolved table read at
         # an old version must expose that version's columns (the latest
         # schema would send executors after columns the old files lack)
@@ -1757,13 +1137,3 @@ class PyDeltaDataSource(DataSource):
     def streamReader(self, schema: T.StructType) -> PyDeltaStreamReader:
         self._snapshot = None  # stream reads tail the log, never a snapshot
         return PyDeltaStreamReader(dict(self.options), schema)
-
-    def writer(self, schema: T.StructType, overwrite: bool) -> PyDeltaBatchWriter:
-        self._snapshot = None
-        return PyDeltaBatchWriter(dict(self.options), schema, overwrite)
-
-    def streamWriter(
-        self, schema: T.StructType, overwrite: bool
-    ) -> PyDeltaStreamWriter:
-        self._snapshot = None
-        return PyDeltaStreamWriter(dict(self.options), schema)

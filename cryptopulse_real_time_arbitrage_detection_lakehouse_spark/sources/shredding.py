@@ -29,8 +29,8 @@ Scope, honestly gated:
   v3, variantType + variantShredding on both protocol sides), staged
   EXECUTOR-SIDE from a Spark DataFrame via ``mapInArrow``
   (`write_shredded_variant_table_dist` — the driver handles one
-  metadata row per file, the stage-then-commit shape of the pydelta
-  batch writers) or driver-side from a pyarrow table for hand-built
+  metadata row per file, the stage-then-commit shape of
+  `DeltaTable.write`) or driver-side from a pyarrow table for hand-built
   unit fixtures (`write_shredded_variant_table`). Both shred
   FULLY-TYPED single-level JSON objects only and refuse anything that
   would need a residual binary (extra keys, type mismatches) — real
@@ -94,7 +94,7 @@ def unshred_struct_array(struct_arr, want: T.StructType, arrow_type_of):
     variant column's typed_value leaves (row-aligned; nulls preserved).
 
     ``arrow_type_of`` maps a Spark primitive type to its arrow type (the
-    pydelta source's `_spark_to_arrow_type`). Raises loudly on residual
+    `delta._spark_to_arrow_type`). Raises loudly on residual
     binary values — a silent null there would change query results.
     """
     import pyarrow as pa
@@ -344,8 +344,8 @@ def write_shredded_variant_table_dist(
     """EXECUTOR-SIDE twin of `write_shredded_variant_table`: ``df`` is a
     Spark DataFrame whose ``json_col`` holds JSON strings; every input
     partition validates, shreds, and stages its own parquet file via
-    ``mapInArrow`` (the same stage-then-commit shape as the pydelta
-    batch writers), and the driver collects only ONE bounded metadata
+    ``mapInArrow`` (the same stage-then-commit shape as
+    `DeltaTable.write`), and the driver collects only ONE bounded metadata
     row per staged file before publishing the fenced log. O(files) on
     the driver, O(rows/partitions) per executor — the scale shape a
     production shredding encoder would have.

@@ -1,12 +1,14 @@
 """Streaming sinks (SURVEY.md K1-K5 twins).
 
-The reference's three jobs all end in a checkpointed Delta append sink;
-delta-spark is not in this image, so the medallion's durable sink is
-checkpointed **parquet append** — same exactly-once contract (offsets +
-commits WAL in the checkpoint, output files tracked in ``_spark_metadata``),
-different table format. Where a hop needs a versioned table (history, time
-travel, MERGE), `start_delta_append_stream` and `start_merge_stream` write
-through the Delta log client in ``sources/delta``.
+The reference's three jobs all end in a checkpointed Delta append sink.
+This engine writes Delta through its own log client in ``sources/delta``
+(no delta-spark dependency): `start_delta_append_stream` is the
+txn-keyed append sink (one commit per non-empty micro-batch, replays
+detected in the log) and `start_merge_stream` the MERGE upsert sink.
+The medallion runner still writes checkpointed **parquet append** sinks
+(`start_parquet_stream`: offsets + commits WAL in the checkpoint, output
+files tracked in ``_spark_metadata``); moving its hops onto
+`start_delta_append_stream` is ROADMAP item 1(b).
 
 The Kafka producer sink (K4, the outbound twin of the reference's
 producer ``/root/reference/src/producers/main.py:46-55``) is split into a

@@ -4440,65 +4440,6 @@ class TestWriterFeatureGate:
         with pytest.raises(NotImplementedError, match="icebergCompatV9"):
             t.compact(spark)
 
-    def test_unknown_writer_feature_refuses_pydelta_writes(
-        self, spark, tmp_path
-    ):
-        from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.sources import (  # noqa: E501
-            pyds,
-        )
-
-        t = DeltaTable(str(tmp_path / "t"))
-        t.write(make_df(spark, 0, 5).coalesce(1))
-        t._publish_or_conflict(
-            t.latest_version() + 1,
-            [
-                {"commitInfo": {"timestamp": 0, "operation": "UPGRADE"}},
-                {
-                    "protocol": {
-                        "minReaderVersion": 1,
-                        "minWriterVersion": 7,
-                        "writerFeatures": ["icebergCompatV9"],
-                    }
-                },
-            ],
-            "UPGRADE",
-        )
-        pyds.register(spark)
-        with pytest.raises(Exception, match="icebergCompatV9"):
-            make_df(spark, 10, 5).write.format("pydelta").option(
-                "path", t.path
-            ).mode("append").save()
-        # the fence held: no staged files or commits landed
-        assert t.read(spark).count() == 5
-
-    def test_append_only_refuses_pydelta_overwrite(self, spark, tmp_path):
-        from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.sources import (  # noqa: E501
-            pyds,
-        )
-
-        t = DeltaTable(str(tmp_path / "t"))
-        t.create(
-            T.StructType(
-                [
-                    T.StructField("id", T.LongType()),
-                    T.StructField("sym", T.StringType()),
-                ]
-            ),
-            configuration={"delta.appendOnly": "true"},
-        )
-        t.write(make_df(spark, 0, 5).coalesce(1))
-        pyds.register(spark)
-        with pytest.raises(Exception, match="append-only"):
-            make_df(spark, 10, 5).write.format("pydelta").option(
-                "path", t.path
-            ).mode("overwrite").save()
-        assert t.read(spark).count() == 5
-        # appends stay legal on append-only tables
-        make_df(spark, 10, 5).write.format("pydelta").option(
-            "path", t.path
-        ).mode("append").save()
-        assert t.read(spark).count() == 10
-
     def test_not_null_invariant_enforced(self, spark, tmp_path):
         t = DeltaTable(str(tmp_path / "t"))
         t.create(
