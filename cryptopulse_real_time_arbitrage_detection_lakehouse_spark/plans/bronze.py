@@ -18,7 +18,7 @@ exactly as the reference does to avoid double-precision loss on the wire
 
 from __future__ import annotations
 
-import tempfile
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..operators.partitioning import spread
 from ..operators.silver import parse_bronze_ticks
 from ..schemas import EVENT_PROPS_SCHEMA
+from ..session import scratch_dir
 from ..sources.kafka_file import FileTopic
 from ..sources.testdata import load_table
 from ..streaming.jobs import bronze_ingest
@@ -168,7 +169,7 @@ GROUP BY partition
 def kafka_topic_partition_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     envelope = synth_kafka_envelope(load_table(spark, sf_dir, "events"))
     topic = FileTopic(
-        tempfile.mkdtemp(prefix="cpkafka_") + "/crypto_market_data",
+        os.path.join(scratch_dir(spark, "cpkafka_"), "crypto_market_data"),
         "crypto_market_data",
         num_partitions=3,
     )

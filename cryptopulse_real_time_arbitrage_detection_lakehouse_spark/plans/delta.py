@@ -10,23 +10,24 @@ time-travel version, as a stream, and via its history. The DuckDB twin
 recomputes the expected contents straight from ``events``, so a green row
 certifies both the query AND the commit/replay machinery underneath it.
 
-Each call builds its table in a fresh temp dir: the cost is one small
-write per query (bounded by the events slice), and isolation means a
-failed run can't poison the next via stale state.
+Each call builds its table in a fresh session scratch dir
+(``session.scratch_dir``, removed with the session): the cost is one
+small write per query (bounded by the events slice), and isolation means
+a failed run can't poison the next via stale state.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.determinism import dsum, sql_dsum
+from ..session import materialized, scratch_dir
 from ..sources.delta import DeltaTable
 from ..sources.testdata import load_table
-from ..streaming.sinks import drain, scoped_shuffle_partitions, start_parquet_stream
+from ..streaming.sinks import drain_to_parquet, scoped_shuffle_partitions
 from .registry import register
 
 #: deterministic commit order: one Delta commit per event_type batch.
@@ -61,10 +62,24 @@ def _build_delta_table(
     """
     if checkpoint_after is None and not fresh:
         return _base_delta_table(spark, sf_dir).fork_with_history(
-            tempfile.mkdtemp(prefix="cphfork_") + "/events_delta"
+            os.path.join(scratch_dir(spark, "cphfork_"), "events_delta")
         )
+    return _write_event_commits(
+        spark,
+        sf_dir,
+        os.path.join(scratch_dir(spark, "cpdelta_"), "events_delta"),
+        checkpoint_after,
+    )
+
+
+def _write_event_commits(
+    spark: SparkSession,
+    sf_dir: str,
+    path: str,
+    checkpoint_after: int | None = None,
+) -> DeltaTable:
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpdelta_") + "/events_delta")
+    table = DeltaTable(path)
     for i, etype in enumerate(_BATCH_TYPES):
         table.write(
             events.filter(F.col("event_type") == etype)
@@ -76,28 +91,25 @@ def _build_delta_table(
     return table
 
 
-#: one shared base table per (session id, sf_dir); queries that only need
-#: the current SNAPSHOT fork it with a zero-copy shallow clone instead of
-#: re-running the 5 Spark writes — the clone primitive doing real work in
-#: the engine's own harness. Queries that exercise the LOG ITSELF
-#: (history, time travel, CDF, streaming tails) still build fresh: a
-#: clone's collapsed history would change what they test.
-_BASE_TABLES: dict[tuple[str, str], str] = {}
-
-
 def _base_delta_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _BASE_TABLES.get(key)
-    if path is not None and os.path.exists(os.path.join(path, "_delta_log")):
-        return DeltaTable(path)
-    base = _build_delta_table(spark, sf_dir, fresh=True)
-    _BASE_TABLES[key] = base.path
-    return base
+    """One shared base table per (session, sf_dir); queries that only
+    need the current SNAPSHOT fork it with a zero-copy shallow clone
+    instead of re-running the 5 Spark writes — the clone primitive doing
+    real work in the engine's own harness. Queries that exercise the LOG
+    ITSELF (history, time travel, CDF, streaming tails) still build
+    fresh: a clone's collapsed history would change what they test."""
+    return DeltaTable(
+        materialized(
+            spark,
+            ("delta_base", os.path.abspath(sf_dir)),
+            lambda path: _write_event_commits(spark, sf_dir, path),
+        )
+    )
 
 
 def _forked_delta_table(spark: SparkSession, sf_dir: str, tag: str) -> DeltaTable:
     return _base_delta_table(spark, sf_dir).clone_to(
-        tempfile.mkdtemp(prefix=f"cpfork_{tag}_") + "/events_delta"
+        os.path.join(scratch_dir(spark, f"cpfork_{tag}_"), "events_delta")
     )
 
 
@@ -173,7 +185,9 @@ GROUP BY event_type
 )
 def delta_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpdeltamerge_") + "/events_delta")
+    table = DeltaTable(
+        os.path.join(scratch_dir(spark, "cpdeltamerge_"), "events_delta")
+    )
     for etype in _BATCH_TYPES:
         if etype != "view":
             table.write(
@@ -217,19 +231,8 @@ GROUP BY event_type
 def delta_stream_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fresh: the JVM file-source stream gates out-of-root (forked) adds
     table = _build_delta_table(spark, sf_dir, fresh=True)
-    root = tempfile.mkdtemp(prefix="cpdeltastream_")
-    out_path = os.path.join(root, "out")
     stream = table.read_stream(spark)
-    with scoped_shuffle_partitions(spark):
-        drain(
-            start_parquet_stream(
-                stream,
-                path=out_path,
-                checkpoint=os.path.join(root, "ckpt"),
-                query_name="delta_stream_type_counts",
-            )
-        )
-    drained = spark.read.parquet(out_path)
+    drained = drain_to_parquet(stream, "delta_stream_type_counts")
     return drained.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -256,7 +259,7 @@ GROUP BY 1
 )
 def delta_partitioned_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpdeltapart_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpdeltapart_"), "events_delta"))
     for etype in _BATCH_TYPES:
         table.write(
             events.filter(F.col("event_type") == etype)
@@ -265,18 +268,9 @@ def delta_partitioned_stream_counts(spark: SparkSession, sf_dir: str) -> DataFra
             .coalesce(1),
             partition_by=["event_date"],
         )
-    root = tempfile.mkdtemp(prefix="cpdeltapartstream_")
-    out_path = os.path.join(root, "out")
-    with scoped_shuffle_partitions(spark):
-        drain(
-            start_parquet_stream(
-                table.read_stream(spark),
-                path=out_path,
-                checkpoint=os.path.join(root, "ckpt"),
-                query_name="delta_partitioned_stream_counts",
-            )
-        )
-    drained = spark.read.parquet(out_path)
+    drained = drain_to_parquet(
+        table.read_stream(spark), "delta_partitioned_stream_counts"
+    )
     return drained.groupBy(
         F.date_format("event_date", "yyyy-MM-dd").alias("event_date")
     ).agg(F.count(F.lit(1)).alias("n"))
@@ -308,7 +302,7 @@ def pyds_delta_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import pyds
 
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cppydss_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cppydss_"), "events_delta"))
     for etype in _BATCH_TYPES:
         table.write(
             events.filter(F.col("event_type") == etype)
@@ -318,20 +312,12 @@ def pyds_delta_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             partition_by=["event_date"],
         )
     pyds.register(spark)
-    root = tempfile.mkdtemp(prefix="cppydss_out_")
-    out_path = os.path.join(root, "out")
-    with scoped_shuffle_partitions(spark):
-        drain(
-            start_parquet_stream(
-                spark.readStream.format("pydelta")
-                .option("path", table.path)
-                .load(),
-                path=out_path,
-                checkpoint=os.path.join(root, "ckpt"),
-                query_name="pyds_delta_stream_counts",
-            )
-        )
-    drained = spark.read.parquet(out_path)
+    stream = (
+        spark.readStream.format("pydelta")
+        .option("path", table.path)
+        .load()
+    )
+    drained = drain_to_parquet(stream, "pyds_delta_stream_counts")
     return drained.groupBy(
         F.date_format("event_date", "yyyy-MM-dd").alias("event_date")
     ).agg(F.count(F.lit(1)).alias("n"))
@@ -368,7 +354,7 @@ def pyds_stream_skip_change_audit(
     from ..sources import pyds
 
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cppydsk_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cppydsk_"), "events_delta"))
     for etype in ("click", "error"):
         table.write(
             events.filter(F.col("event_type") == etype)
@@ -390,28 +376,17 @@ def pyds_stream_skip_change_audit(
         .coalesce(1)
     )
     pyds.register(spark)
-    root = tempfile.mkdtemp(prefix="cppydsk_out_")
-    out_path = os.path.join(root, "out")
-    with scoped_shuffle_partitions(spark):
-        drain(
-            start_parquet_stream(
-                spark.readStream.format("pydelta")
-                .option("path", table.path)
-                .option("skipChangeCommits", "true")
-                .option("ignoreDeletes", "true")
-                .load(),
-                path=out_path,
-                checkpoint=os.path.join(root, "ckpt"),
-                query_name="pyds_stream_skip_change_audit",
-            )
-        )
-    return (
-        spark.read.parquet(out_path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            dsum(F.col("value")).alias("total_value"),
-        )
+    stream = (
+        spark.readStream.format("pydelta")
+        .option("path", table.path)
+        .option("skipChangeCommits", "true")
+        .option("ignoreDeletes", "true")
+        .load()
+    )
+    drained = drain_to_parquet(stream, "pyds_stream_skip_change_audit")
+    return drained.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        dsum(F.col("value")).alias("total_value"),
     )
 
 
@@ -446,7 +421,7 @@ def pyds_stream_where_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import pyds
 
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cppydsw_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cppydsw_"), "events_delta"))
     for etype in _BATCH_TYPES:
         sl = events.filter(F.col("event_type") == etype).select(*_EVENT_COLS)
         # value-disjoint files: the first is provably below the
@@ -454,27 +429,16 @@ def pyds_stream_where_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         table.write(sl.filter(F.col("value") < 50.0).coalesce(1))
         table.write(sl.filter(F.col("value") >= 50.0).coalesce(1))
     pyds.register(spark)
-    root = tempfile.mkdtemp(prefix="cppydsw_out_")
-    out_path = os.path.join(root, "out")
-    with scoped_shuffle_partitions(spark):
-        drain(
-            start_parquet_stream(
-                spark.readStream.format("pydelta")
-                .option("path", table.path)
-                .option("where", "value >= 50.0 AND value < 200.0")
-                .load(),
-                path=out_path,
-                checkpoint=os.path.join(root, "ckpt"),
-                query_name="pyds_stream_where_audit",
-            )
-        )
-    return (
-        spark.read.parquet(out_path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            dsum(F.col("value")).alias("total_value"),
-        )
+    stream = (
+        spark.readStream.format("pydelta")
+        .option("path", table.path)
+        .option("where", "value >= 50.0 AND value < 200.0")
+        .load()
+    )
+    drained = drain_to_parquet(stream, "pyds_stream_where_audit")
+    return drained.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        dsum(F.col("value")).alias("total_value"),
     )
 
 
@@ -505,7 +469,7 @@ def delta_generated_date_partition(spark: SparkSession, sf_dir: str) -> DataFram
     events = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin(*_BATCH_TYPES)
     )
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpgencol_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpgencol_"), "events_delta"))
     table.write(
         events.select(*_EVENT_COLS).repartition(2),
         partition_by=["event_date"],
@@ -612,21 +576,13 @@ def pyds_cdf_stream_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "event_type = 'purchase' AND value > 50", {"value": "value * 0.5"}
     )
     pyds.register(spark)
-    root = tempfile.mkdtemp(prefix="cpcdfstream_")
-    out_path = os.path.join(root, "out")
-    with scoped_shuffle_partitions(spark):
-        drain(
-            start_parquet_stream(
-                spark.readStream.format("pydelta")
-                .option("path", table.path)
-                .option("readChangeFeed", "true")
-                .load(),
-                path=out_path,
-                checkpoint=os.path.join(root, "ckpt"),
-                query_name="pyds_cdf_stream_audit",
-            )
-        )
-    drained = spark.read.parquet(out_path)
+    stream = (
+        spark.readStream.format("pydelta")
+        .option("path", table.path)
+        .option("readChangeFeed", "true")
+        .load()
+    )
+    drained = drain_to_parquet(stream, "pyds_cdf_stream_audit")
     return drained.groupBy(
         F.col("_change_type").alias("change_type"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n"))
@@ -726,7 +682,7 @@ def delta_gdpr_delete_stream_audit(spark: SparkSession, sf_dir: str) -> DataFram
     table = _forked_delta_table(spark, sf_dir, "gdpr")
 
     # the deletion-request stream: two bounded micro-batches of user ids
-    req_dir = tempfile.mkdtemp(prefix="cpgdpr_req_")
+    req_dir = scratch_dir(spark, "cpgdpr_req_")
     for i, digit in enumerate((3, 7)):
         spark.createDataFrame([(digit,)], "last_digit long").write.parquet(
             os.path.join(req_dir, f"batch{i}")
@@ -783,7 +739,7 @@ def delta_tpch_refresh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table = DeltaTable(tempfile.mkdtemp(prefix="cptpchrf_") + "/orders_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cptpchrf_"), "orders_delta"))
     table.write(orders.filter(F.col("o_orderkey") % 10 != 0).repartition(4))
     # RF1: new sales append
     table.write(orders.filter(F.col("o_orderkey") % 10 == 0).repartition(2))
@@ -1003,7 +959,7 @@ GROUP BY event_type
 )
 def delta_mapped_rename_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpmap_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpmap_"), "events_delta"))
     table.write(
         events.filter(F.col("event_type").isin("click", "view"))
         .select(
@@ -1162,7 +1118,7 @@ def delta_ict_travel_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
 
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpict_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpict_"), "events_delta"))
     for etype in ("click", "error"):
         table.write(
             events.filter(F.col("event_type") == etype)
@@ -1328,7 +1284,7 @@ def delta_idmode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load_table(spark, sf_dir, "events")
     sel = events.select(*_EVENT_COLS)
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpidm_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpidm_"), "events_delta"))
     table.create(sel.schema, mapping_mode="id")
     for etype in ("click", "purchase"):
         table.write(
@@ -1398,7 +1354,7 @@ GROUP BY user_id % 4
 )
 def delta_merge_clauses_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpmrgcl_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpmrgcl_"), "events_delta"))
     table.write(
         events.filter(F.col("event_type").isin("click", "view"))
         .select("event_id", "user_id", "value")
@@ -1463,7 +1419,7 @@ GROUP BY event_type
 def delta_replace_where_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     cols = ("event_id", "user_id", "event_type", "value")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cprepw_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cprepw_"), "events_delta"))
     table.write(
         events.filter(F.col("event_type").isin("click", "view", "purchase"))
         .select(*cols)
@@ -1545,7 +1501,7 @@ FROM ranked
 def delta_row_tracking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     cols = ("event_id", "user_id")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cprowtrk_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cprowtrk_"), "events_delta"))
     # v0: clicks, one file in event_id order -> row ids = rank at birth
     table.write(
         events.filter(F.col("event_type") == "click")
@@ -1610,7 +1566,7 @@ def delta_liquid_clustering_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value"
     )
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpliquid_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpliquid_"), "events_delta"))
     table.write(events.repartition(8))
     table.set_cluster_by(["user_id", "event_id"])
     table.compact(spark, target_files=8)
@@ -1956,7 +1912,7 @@ def delta_type_widening_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("value").cast("float").alias("value"),
     )
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpwiden_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpwiden_"), "events_delta"))
     for etype in _BATCH_TYPES:
         table.write(
             narrow.filter(F.col("event_type") == etype).coalesce(1)
@@ -2107,7 +2063,7 @@ GROUP BY event_type
 )
 def delta_variant_events_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpvariant_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpvariant_"), "events_delta"))
     table.write(
         events.select(
             "event_id",
@@ -2188,7 +2144,7 @@ def pyds_variant_shredded_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both the staging write and the audited read at that parallelism
     n_files = max(4, enriched.rdd.getNumPartitions())
     dt = write_shredded_variant_table_dist(
-        tempfile.mkdtemp(prefix="cpshred_") + "/ev_shred",
+        os.path.join(scratch_dir(spark, "cpshred_"), "ev_shred"),
         enriched.repartition(n_files),
         "payload",
         {"k": "long", "t": "string", "u2": "long"},
@@ -2238,7 +2194,7 @@ GROUP BY o_orderpriority
 def delta_convert_parquet_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    lake = tempfile.mkdtemp(prefix="cpconvert_") + "/orders_lake"
+    lake = os.path.join(scratch_dir(spark, "cpconvert_"), "orders_lake")
     os.makedirs(lake)
     shutil.copy(
         os.path.join(sf_dir, "orders.parquet"),
@@ -2364,7 +2320,7 @@ def delta_identity_column_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpident_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpident_"), "events_delta"))
     table.create(
         T.StructType(
             [
@@ -2434,7 +2390,7 @@ FROM q, hi WHERE q.cents >= hi.cut
 )
 def delta_nested_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpnest_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpnest_"), "events_delta"))
     views = events.filter(F.col("event_type") == "view").select(
         F.struct(
             F.floor(F.col("value") * 100).cast("long").alias("cents"),
@@ -2508,7 +2464,7 @@ def delta_maintenance_lifecycle_audit(
     from pyspark.sql import types as T
 
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpmaint_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpmaint_"), "events_delta"))
     table.create(
         T.StructType(
             [
@@ -2590,7 +2546,7 @@ GROUP BY event_type
 )
 def delta_optimize_where_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpoptw_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpoptw_"), "events_delta"))
     types = ("click", "error", "view")
     for etype in types:
         df = (
@@ -2669,7 +2625,7 @@ def delta_merge_identity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpmident_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpmident_"), "events_delta"))
     table.create(
         T.StructType(
             [
@@ -2783,7 +2739,7 @@ def delta_default_columns_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpdflt_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpdflt_"), "events_delta"))
     table.create(
         T.StructType(
             [
@@ -2865,7 +2821,7 @@ GROUP BY event_type ORDER BY event_type
 )
 def delta_drop_feature_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpdropf_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpdropf_"), "events_delta"))
     table.write(events.select("event_id", "event_type", "value"))
     table.delete(spark, "event_type = 'error'")
     try:
@@ -2936,7 +2892,7 @@ GROUP BY event_type
 )
 def delta_mapped_stream_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpmaps_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpmaps_"), "events_delta"))
     table.write(
         events.filter(F.col("event_type").isin("click", "view"))
         .select("event_id", "event_type", "value")
@@ -2951,18 +2907,9 @@ def delta_mapped_stream_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .coalesce(1)
     )
-    root = tempfile.mkdtemp(prefix="cpmaps_out_")
-    out_path = os.path.join(root, "out")
-    with scoped_shuffle_partitions(spark):
-        drain(
-            start_parquet_stream(
-                table.read_stream(spark),
-                path=out_path,
-                checkpoint=os.path.join(root, "ckpt"),
-                query_name="delta_mapped_stream_audit",
-            )
-        )
-    drained = spark.read.parquet(out_path)
+    drained = drain_to_parquet(
+        table.read_stream(spark), "delta_mapped_stream_audit"
+    )
     return drained.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), dsum("amount").alias("total_amount")
     )
@@ -2995,7 +2942,7 @@ def pyds_mapped_stream_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import pyds
 
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cppydsm_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cppydsm_"), "events_delta"))
     table.create(
         T.StructType(
             [
@@ -3018,20 +2965,12 @@ def pyds_mapped_stream_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
     )
     pyds.register(spark)
-    root = tempfile.mkdtemp(prefix="cppydsm_out_")
-    out_path = os.path.join(root, "out")
-    with scoped_shuffle_partitions(spark):
-        drain(
-            start_parquet_stream(
-                spark.readStream.format("pydelta")
-                .option("path", table.path)
-                .load(),
-                path=out_path,
-                checkpoint=os.path.join(root, "ckpt"),
-                query_name="pyds_mapped_stream_audit",
-            )
-        )
-    drained = spark.read.parquet(out_path)
+    stream = (
+        spark.readStream.format("pydelta")
+        .option("path", table.path)
+        .load()
+    )
+    drained = drain_to_parquet(stream, "pyds_mapped_stream_audit")
     return drained.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), dsum("amount").alias("total_amount")
     )
@@ -3064,7 +3003,7 @@ GROUP BY event_type
 )
 def delta_vacuum_protocol_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpvpc_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpvpc_"), "events_delta"))
     table.write(
         events.filter(F.col("event_type") == "click")
         .select("event_id", "event_type", "value")
@@ -3158,10 +3097,10 @@ def pyds_rate_limit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         e: slice_of(e).count()
         for e in ("click", "error", "purchase", "signup", "view")
     }
-    table = DeltaTable(tempfile.mkdtemp(prefix="cprate_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cprate_"), "events_delta"))
     table.write(slice_of("click"))  # v0: consumed by the unbounded batch
     pyds.register(spark)
-    root = tempfile.mkdtemp(prefix="cprate_out_")
+    root = scratch_dir(spark, "cprate_out_")
     out_path = os.path.join(root, "out")
 
     def rows_in_sink() -> int:
@@ -3264,7 +3203,7 @@ GROUP BY event_type
 def delta_copy_into_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.parquet as pq
 
-    land = tempfile.mkdtemp(prefix="cpcopy_") + "/landing"
+    land = os.path.join(scratch_dir(spark, "cpcopy_"), "landing")
     os.makedirs(land)
     src = pq.read_table(os.path.join(sf_dir, "events.parquet"))
     n = src.num_rows
@@ -3276,7 +3215,7 @@ def delta_copy_into_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq.write_table(src.slice(off, ln), p)
         files.append(p)
 
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpcopy_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpcopy_"), "events_delta"))
     table.create(spark.read.parquet(files[0]).schema)
     r1 = table.copy_into(spark, files[:2])
     r2 = table.copy_into(spark, files)
@@ -3350,7 +3289,7 @@ def delta_generated_partition_pruning_audit(
     )
 
     events = load_table(spark, sf_dir, "events").select(*_EVENT_COLS)
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpgenpp_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpgenpp_"), "events_delta"))
     table.write(
         events,
         partition_by=["event_date"],
@@ -3447,7 +3386,7 @@ def delta_scd2_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal"
     )
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpscd2_") + "/dim_customer")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpscd2_"), "dim_customer"))
     table.write(
         cust.select(
             "c_custkey",
@@ -3563,7 +3502,7 @@ def delta_incremental_mv_refresh_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(*_EVENT_COLS)
-    root = tempfile.mkdtemp(prefix="cpmvr_")
+    root = scratch_dir(spark, "cpmvr_")
     base = DeltaTable(root + "/base")
     mv = DeltaTable(root + "/mv")
     dec = "decimal(25,10)"
@@ -3680,7 +3619,7 @@ GROUP BY event_type
 )
 def delta_txn_cleanup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(*_EVENT_COLS)
-    table = DeltaTable(tempfile.mkdtemp(prefix="cptxncl_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cptxncl_"), "events_delta"))
     app = "cp-ingest"
     sl = lambda et: events.filter(  # noqa: E731
         F.col("event_type") == et
@@ -3747,8 +3686,8 @@ def delta_optimized_write_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_type").isin(*_BATCH_TYPES))
         .repartition(32)
     )
-    opt = DeltaTable(tempfile.mkdtemp(prefix="cpoptw8_") + "/opt")
-    plain = DeltaTable(tempfile.mkdtemp(prefix="cpoptw8_") + "/plain")
+    opt = DeltaTable(os.path.join(scratch_dir(spark, "cpoptw8_"), "opt"))
+    plain = DeltaTable(os.path.join(scratch_dir(spark, "cpoptw8_"), "plain"))
     opt.write(events, partition_by=["event_type"], optimize_write=True)
     plain.write(events, partition_by=["event_type"])
     n_vals = len(_BATCH_TYPES)
@@ -3799,7 +3738,7 @@ def delta_version_checksum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
 
     events = load_table(spark, sf_dir, "events").select(*_EVENT_COLS)
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpcrc_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpcrc_"), "events_delta"))
     for etype in _BATCH_TYPES:
         table.write(
             events.filter(F.col("event_type") == etype).coalesce(1)
@@ -3910,7 +3849,7 @@ def pipeline_expectations_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         Expectation("event_id_present", "event_id IS NOT NULL", "fail"),
     ]
     clean, quarantine, stats = apply_expectations(events, rules)
-    root = tempfile.mkdtemp(prefix="cpexp_")
+    root = scratch_dir(spark, "cpexp_")
     curated = DeltaTable(root + "/curated")
     quar = DeltaTable(root + "/quarantine")
     curated.write(clean)
@@ -3971,7 +3910,7 @@ def delta_stats_recompute_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
 
     events = load_table(spark, sf_dir, "events").select(*_EVENT_COLS)
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpstats_") + "/events_delta")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpstats_"), "events_delta"))
     for lo, hi in ((0.0, 50.0), (50.0, 200.0), (200.0, 1e12)):
         table.write(
             events.filter(
@@ -4067,7 +4006,7 @@ def delta_deep_clone_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     fork = _forked_delta_table(spark, sf_dir, "deepclone")
     fork.delete(spark, "value < 30")
     deep = fork.deep_clone_to(
-        tempfile.mkdtemp(prefix="cpdeep_") + "/events_deep", spark=spark
+        os.path.join(scratch_dir(spark, "cpdeep_"), "events_deep"), spark=spark
     )
     _meta, adds = deep._snapshot_state(None)
     bad = [
@@ -4124,7 +4063,7 @@ def delta_generate_manifest_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    table = DeltaTable(tempfile.mkdtemp(prefix="cpmanif_") + "/t")
+    table = DeltaTable(os.path.join(scratch_dir(spark, "cpmanif_"), "t"))
     table.write(
         events.filter(F.col("event_type").isin(*_BATCH_TYPES)).select(
             "event_id", "ts", "user_id", "event_type", "value"
@@ -4197,7 +4136,7 @@ GROUP BY event_type
 )
 def delta_log_compaction_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(*_EVENT_COLS)
-    t = DeltaTable(tempfile.mkdtemp(prefix="cplogcmp_") + "/events_delta")
+    t = DeltaTable(os.path.join(scratch_dir(spark, "cplogcmp_"), "events_delta"))
     sl = lambda et: events.filter(  # noqa: E731
         F.col("event_type") == et
     ).coalesce(1)

@@ -9,8 +9,6 @@ time-travel audits live in ``plans/delta.py``.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -18,6 +16,7 @@ from ..functions.determinism import dsum as _dsum
 from ..functions.determinism import sql_dsum as _sql_dsum
 from ..operators.partitioning import write_bucketed
 from ..operators.zorder import sql_interleave, sql_scaled, with_zvalue
+from ..session import scratch_dir
 from ..sources.testdata import load_table
 from .registry import register
 
@@ -92,7 +91,7 @@ def bucketed_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderpriority"
     )
     db = f"bkt_{_uuid.uuid4().hex[:10]}"
-    loc = tempfile.mkdtemp(prefix="cpbkt_")
+    loc = scratch_dir(spark, "cpbkt_")
     spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
     write_bucketed(li, f"{db}.li_b", key="l_orderkey", buckets=8)
     write_bucketed(orders, f"{db}.orders_b", key="o_orderkey", buckets=8)

@@ -7,6 +7,8 @@ tick mapping (`operators.ticks`).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -18,6 +20,7 @@ from ..operators.gold import candles
 from ..operators.partitioning import spread
 from ..operators.running_vwap import running_vwap
 from ..operators.ticks import EVENTS_TICKS_CTE, events_as_ticks
+from ..session import materialized
 from ..sources.testdata import load_table
 from .registry import register
 
@@ -58,32 +61,22 @@ def _gold(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (round-3 verdict, `candle_close_delta` drift). Materialized as a
 #: PARQUET table on disk, not a localCheckpoint: checkpoint blocks die
 #: with an executor (a lost executor would permanently fail every later
-#: gold query), while the parquet table is durable, survives session
-#: restarts, and gives downstream plans real column pruning per branch.
-_GOLD_CACHE: dict[str, tuple[float, str]] = {}
-
-
+#: gold query), while the parquet table lasts as long as the session
+#: and gives downstream plans real column pruning per branch.
 def _gold_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    # the source's mtime invalidates the cache when testdata at the same
-    # path is regenerated. A superseded materialization is ABANDONED, not
-    # deleted: DataFrames returned earlier are lazy and still reference
-    # the old path — deleting it would fail their next action mid-session.
-    # The leak is bounded by the number of regenerations (tiny; tmp is
-    # reclaimed at process end).
+    # the source's mtime is part of the key, so regenerated testdata at
+    # the same path builds a new table. A superseded materialization is
+    # ABANDONED, not deleted: DataFrames returned earlier are lazy and
+    # still reference the old path — deleting it would fail their next
+    # action mid-session. It goes with the session's scratch on stop().
     events_file = os.path.join(sf_dir, "events.parquet")
     mtime = os.path.getmtime(events_file) if os.path.exists(events_file) else 0
-    key = os.path.abspath(sf_dir)
-    cached = _GOLD_CACHE.get(key)
-    if cached is not None and (cached[0] != mtime or not os.path.isdir(cached[1])):
-        cached = None
-    if cached is None:
-        path = tempfile.mkdtemp(prefix="cpgold_") + "/gold_candles"
-        _gold(spark, sf_dir).write.parquet(path)
-        _GOLD_CACHE[key] = cached = (mtime, path)
-    return spark.read.parquet(cached[1])
+    path = materialized(
+        spark,
+        ("gold", os.path.abspath(sf_dir), mtime),
+        lambda p: _gold(spark, sf_dir).write.parquet(p),
+    )
+    return spark.read.parquet(path)
 
 
 #: DuckDB twin of the gold candle aggregation (kept in lockstep with

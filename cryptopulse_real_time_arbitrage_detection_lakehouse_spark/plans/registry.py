@@ -12,7 +12,8 @@ cluster jobs before any action on the returned frame — queries that use
 ``operators.partitioning.shared`` (an EAGER ``localCheckpoint``
 materializing a multiply-referenced subplan) or that build fixture
 tables (the Delta/lakehouse/Kafka-twin queries write real tables under a
-temp dir). Tooling that merely introspects plans (``.explain``, schema
+session scratch dir, ``session.scratch_dir``, removed on ``spark.stop()``).
+Tooling that merely introspects plans (``.explain``, schema
 inspection) should expect ``fn`` itself to take seconds and to pin
 executor-storage blocks until the frame is garbage collected.
 """

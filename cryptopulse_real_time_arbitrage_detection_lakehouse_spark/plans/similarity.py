@@ -44,6 +44,7 @@ from ..functions.similarity import (
     sql_sign_bucket,
 )
 from ..operators.partitioning import shared
+from ..session import materialized, scratch_dir
 from ..sources.testdata import load_table
 from .registry import register
 
@@ -187,7 +188,7 @@ def sim_cosine_topk_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     qvec = _query_vector(spark, sf_dir)
     qbucket = sign_bucket_py(qvec)
     index_path = _cached_index_path(
-        "lsh", sf_dir, lambda p: write_lsh_index(emb, p)
+        spark, "lsh", sf_dir, lambda p: write_lsh_index(emb, p)
     )
     survivors = read_lsh_bucket(spark, index_path, qbucket).filter(
         F.col("vec_id") != QUERY_VEC_ID
@@ -259,21 +260,12 @@ ORDER BY cosine DESC, a.vec_id LIMIT {TOP_K}
 #: (round-3 behavior) charged the build to query time: 4.8 s vs 0.5 s
 #: for the probe alone at sf0.1. The cache key is (kind, sf_dir) because
 #: every other input (hyperplanes, centroids ids, quantization scale) is
-#: a module constant and the testdata tables are immutable; the index
-#: lives on disk so it survives Spark session restarts within a process.
-_ANN_INDEX_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _cached_index_path(kind: str, sf_dir: str, build) -> str:
-    import tempfile
-
-    key = (kind, os.path.abspath(sf_dir))
-    path = _ANN_INDEX_CACHE.get(key)
-    if path is None or not os.path.isdir(path):
-        path = tempfile.mkdtemp(prefix=f"cp{kind}_") + f"/{kind}_index"
-        build(path)
-        _ANN_INDEX_CACHE[key] = path
-    return path
+#: a module constant and the testdata tables are immutable. The index
+#: lives in the session's scratch, so a new session rebuilds it; every
+#: caller (tests, bench.py, perfbench, the CLI) runs one session per
+#: process, so no reuse is lost.
+def _cached_index_path(spark: SparkSession, kind: str, sf_dir: str, build) -> str:
+    return materialized(spark, (kind, os.path.abspath(sf_dir)), build)
 
 
 def _centroids(spark: SparkSession, sf_dir: str) -> dict[int, list[float]]:
@@ -339,7 +331,7 @@ def sim_cosine_topk_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     qvec = _query_vector(spark, sf_dir)
     cents = _centroids(spark, sf_dir)
     index_path = _cached_index_path(
-        "ivf", sf_dir, lambda p: write_ivf_index(emb, p, cents)
+        spark, "ivf", sf_dir, lambda p: write_ivf_index(emb, p, cents)
     )
     probed = ivf_probe_cells(cents, qvec, NPROBE)
     hits = read_ivf_cells(spark, index_path, probed)
@@ -1484,7 +1476,7 @@ def _ivfpq_adc_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         write_ivfpq_index(coded, path)
 
-    index_path = _cached_index_path("ivfpq", sf_dir, build)
+    index_path = _cached_index_path(spark, "ivfpq", sf_dir, build)
     probed = ivf_probe_cells(cents, qvec, NPROBE)
     hits = read_ivf_cells(spark, index_path, probed)
     return hits.filter(F.col("vec_id") != QUERY_VEC_ID).select(
@@ -2387,8 +2379,6 @@ def emb_binary_quantization_recall_audit(
     tags=("similarity", "ann", "ivf", "index", "incremental", "topk"),
 )
 def sim_ivf_index_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tf
-
     from ..operators.ann_index import (
         append_ivf_index,
         read_ivf_cells,
@@ -2398,7 +2388,7 @@ def sim_ivf_index_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = _query_vector(spark, sf_dir)
     cents = _centroids(spark, sf_dir)
-    index_path = _tf.mkdtemp(prefix="cpivfinc_") + "/ivf_inc"
+    index_path = os.path.join(scratch_dir(spark, "cpivfinc_"), "ivf_inc")
     write_ivf_index(emb.filter(F.col("vec_id") % 2 == 0), index_path, cents)
     append_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), index_path, cents)
     probed = ivf_probe_cells(cents, qvec, NPROBE)

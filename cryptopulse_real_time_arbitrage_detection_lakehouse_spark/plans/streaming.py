@@ -14,7 +14,6 @@ green CORRECTNESS row instead of only a pytest.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -26,7 +25,8 @@ from ..operators.ticks import (
 )
 from ..sources.testdata import load_table
 from ..streaming.jobs import gold_stream
-from ..streaming.sinks import drain, scoped_shuffle_partitions, start_parquet_stream
+from ..session import scratch_dir
+from ..streaming.sinks import drain, drain_to_parquet, scoped_shuffle_partitions
 from ..streaming.sources import read_parquet_stream
 from .registry import register
 
@@ -75,23 +75,13 @@ WHERE g.we <= wm.horizon
 def streaming_gold_candles_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ticks = events_as_ticks(load_table(spark, sf_dir, "events"))
     # Materialize the tick stream source, then drain it through the real
-    # streaming job. Fresh temp dirs per call: checkpoints are stateful.
-    root = tempfile.mkdtemp(prefix="cpstream_")
-    src = os.path.join(root, "src")
-    gold_path = os.path.join(root, "gold")
-    ckpt = os.path.join(root, "ckpt")
+    # streaming job. Fresh scratch dirs per call: checkpoints are stateful.
+    src = os.path.join(scratch_dir(spark, "cpstream_"), "src")
     ticks.write.parquet(src)
     stream = read_parquet_stream(spark, src, ticks.schema)
-    with scoped_shuffle_partitions(spark):
-        drain(
-            start_parquet_stream(
-                gold_stream(stream, watermark=WATERMARK),
-                path=gold_path,
-                checkpoint=ckpt,
-                query_name="gold_candles_availablenow",
-            )
-        )
-    out = spark.read.parquet(gold_path)
+    out = drain_to_parquet(
+        gold_stream(stream, watermark=WATERMARK), "gold_candles_availablenow"
+    )
     return out.select(
         fmt_ts("window_start", "window_start"),
         fmt_ts("window_end", "window_end"),
@@ -147,10 +137,7 @@ def streaming_click_purchase_interval_join(
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    root = tempfile.mkdtemp(prefix="cpssjoin_")
-    src = os.path.join(root, "src")
-    out_path = os.path.join(root, "joined")
-    ckpt = os.path.join(root, "ckpt")
+    src = os.path.join(scratch_dir(spark, "cpssjoin_"), "src")
     # one file -> one micro-batch: deterministic emission (state eviction
     # across micro-batches would otherwise depend on file order)
     events.coalesce(1).write.parquet(src)
@@ -183,18 +170,7 @@ def streaming_click_purchase_interval_join(
     ).select("purchase_user", "purchase_id", "click_id")
     # stream-stream join state cost is (shuffle partitions × micro-batch)
     # store commits — drain at the reference's narrow streaming width
-    with scoped_shuffle_partitions(spark):
-        drain(
-            start_parquet_stream(
-                joined,
-                path=out_path,
-                checkpoint=ckpt,
-                query_name="click_purchase_interval_join",
-            )
-        )
-    # explicit schema: a zero-match drain commits no data files and
-    # schema inference would fail where the correct answer is empty
-    matches = spark.read.schema(joined.schema).parquet(out_path)
+    matches = drain_to_parquet(joined, "click_purchase_interval_join")
     return matches.groupBy((F.col("purchase_user") % 10).alias("user_bucket")).agg(
         F.count(F.lit(1)).alias("n_matches"),
         F.countDistinct("purchase_id").alias("n_purchases"),
@@ -271,10 +247,7 @@ def streaming_purchase_attribution_left_join(
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    root = tempfile.mkdtemp(prefix="cplojoin_")
-    src = os.path.join(root, "src")
-    out_path = os.path.join(root, "joined")
-    ckpt = os.path.join(root, "ckpt")
+    src = os.path.join(scratch_dir(spark, "cplojoin_"), "src")
     events.coalesce(1).write.parquet(src)
 
     stream = read_parquet_stream(spark, src, events.schema)
@@ -303,16 +276,7 @@ def streaming_purchase_attribution_left_join(
         & (F.col("click_ts") <= F.col("purchase_ts")),
         "left_outer",
     ).select("purchase_user", "purchase_id", "click_id")
-    with scoped_shuffle_partitions(spark):
-        drain(
-            start_parquet_stream(
-                joined,
-                path=out_path,
-                checkpoint=ckpt,
-                query_name="purchase_attribution_left_join",
-            )
-        )
-    emitted = spark.read.schema(joined.schema).parquet(out_path)
+    emitted = drain_to_parquet(joined, "purchase_attribution_left_join")
     return emitted.groupBy(
         (F.col("purchase_user") % 10).alias("user_bucket")
     ).agg(
@@ -358,10 +322,7 @@ def streaming_dedup_within_watermark(
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    root = tempfile.mkdtemp(prefix="cpsdedup_")
-    src = os.path.join(root, "src")
-    out_path = os.path.join(root, "deduped")
-    ckpt = os.path.join(root, "ckpt")
+    src = os.path.join(scratch_dir(spark, "cpsdedup_"), "src")
     # triplicate delivery, one file -> one deterministic micro-batch
     events.unionAll(events).unionAll(events).coalesce(1).write.parquet(src)
 
@@ -370,16 +331,7 @@ def streaming_dedup_within_watermark(
         stream.withWatermark("ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    with scoped_shuffle_partitions(spark):
-        drain(
-            start_parquet_stream(
-                deduped,
-                path=out_path,
-                checkpoint=ckpt,
-                query_name="dedup_within_watermark",
-            )
-        )
-    unique = spark.read.schema(deduped.schema).parquet(out_path)
+    unique = drain_to_parquet(deduped, "dedup_within_watermark")
     return unique.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_unique"),
         F.lit(3).cast("long").alias("copies_ingested"),
@@ -483,10 +435,7 @@ def streaming_user_sessions_stateful(
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id"
     )
-    root = tempfile.mkdtemp(prefix="cpsess_")
-    src = os.path.join(root, "src")
-    out_path = os.path.join(root, "sessions")
-    ckpt = os.path.join(root, "ckpt")
+    src = os.path.join(scratch_dir(spark, "cpsess_"), "src")
     events.coalesce(1).write.parquet(src)
 
     stream = read_parquet_stream(spark, src, events.schema).select(
@@ -507,16 +456,7 @@ def streaming_user_sessions_stateful(
     # serializes ~100k pandas group calls through 4 workers. Width 16
     # keeps per-partition state stores small AND 4x's the Arrow lanes
     # (10x-events probe: 10.5s -> ~6s).
-    with scoped_shuffle_partitions(spark, 16):
-        drain(
-            start_parquet_stream(
-                sessions,
-                path=out_path,
-                checkpoint=ckpt,
-                query_name="user_sessions_stateful",
-            )
-        )
-    sess = spark.read.schema(sessions.schema).parquet(out_path)
+    sess = drain_to_parquet(sessions, "user_sessions_stateful", 16)
     return (
         sess.groupBy((F.col("user_id") % 10).alias("user_bucket"))
         .agg(
@@ -572,7 +512,7 @@ def streaming_mv_refresh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    root = tempfile.mkdtemp(prefix="cpsmvr_")
+    root = scratch_dir(spark, "cpsmvr_")
     base = DeltaTable(os.path.join(root, "base"))
     mv = DeltaTable(os.path.join(root, "mv"))
     dec = "decimal(25,10)"
@@ -718,7 +658,7 @@ def streaming_expectations_quarantine(
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    root = tempfile.mkdtemp(prefix="cpsexp_")
+    root = scratch_dir(spark, "cpsexp_")
     src = os.path.join(root, "src")
     events.repartition(4).write.parquet(src)
     curated = DeltaTable(os.path.join(root, "curated"))
@@ -817,10 +757,7 @@ def streaming_static_enrichment(
         "c_custkey", "c_mktsegment"
     )
     n_cust = customer.count()
-    root = tempfile.mkdtemp(prefix="cpenrich_")
-    src = os.path.join(root, "src")
-    out_path = os.path.join(root, "enriched")
-    ckpt = os.path.join(root, "ckpt")
+    src = os.path.join(scratch_dir(spark, "cpenrich_"), "src")
     events.coalesce(1).write.parquet(src)
 
     stream = read_parquet_stream(spark, src, events.schema)
@@ -830,16 +767,7 @@ def streaming_static_enrichment(
         F.broadcast(customer),
         F.col("cust_key") == F.col("c_custkey"),
     ).select("event_id", "user_id", "event_type", "c_mktsegment")
-    with scoped_shuffle_partitions(spark):
-        drain(
-            start_parquet_stream(
-                enriched,
-                path=out_path,
-                checkpoint=ckpt,
-                query_name="static_enrichment",
-            )
-        )
-    emitted = spark.read.schema(enriched.schema).parquet(out_path)
+    emitted = drain_to_parquet(enriched, "static_enrichment")
     return emitted.groupBy(
         F.col("c_mktsegment").alias("mktsegment"), "event_type"
     ).agg(
@@ -896,10 +824,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     events = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    root = tempfile.mkdtemp(prefix="cpsess_")
-    src = os.path.join(root, "src")
-    out_path = os.path.join(root, "sessions")
-    ckpt = os.path.join(root, "ckpt")
+    src = os.path.join(scratch_dir(spark, "cpsess_"), "src")
     events.coalesce(1).write.parquet(src)
 
     stream = read_parquet_stream(spark, src, events.schema)
@@ -916,16 +841,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    with scoped_shuffle_partitions(spark):
-        drain(
-            start_parquet_stream(
-                sess,
-                path=out_path,
-                checkpoint=ckpt,
-                query_name="session_windows",
-            )
-        )
-    return spark.read.schema(sess.schema).parquet(out_path)
+    return drain_to_parquet(sess, "session_windows")
 
 
 @register(
@@ -1008,10 +924,7 @@ def streaming_purchase_attribution_full_outer(
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    root = tempfile.mkdtemp(prefix="cpfojoin_")
-    src = os.path.join(root, "src")
-    out_path = os.path.join(root, "joined")
-    ckpt = os.path.join(root, "ckpt")
+    src = os.path.join(scratch_dir(spark, "cpfojoin_"), "src")
     events.coalesce(1).write.parquet(src)
 
     stream = read_parquet_stream(spark, src, events.schema)
@@ -1044,16 +957,7 @@ def streaming_purchase_attribution_full_outer(
         "purchase_id",
         "click_id",
     )
-    with scoped_shuffle_partitions(spark):
-        drain(
-            start_parquet_stream(
-                joined,
-                path=out_path,
-                checkpoint=ckpt,
-                query_name="purchase_attribution_full_outer",
-            )
-        )
-    emitted = spark.read.schema(joined.schema).parquet(out_path)
+    emitted = drain_to_parquet(joined, "purchase_attribution_full_outer")
     return emitted.groupBy((F.col("user_id") % 10).alias("user_bucket")).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count(
@@ -1112,10 +1016,7 @@ def streaming_quoted_spread_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ticks import events_as_quotes
 
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="cpsquote_")
-    src = os.path.join(root, "src")
-    out_path = os.path.join(root, "spread")
-    ckpt = os.path.join(root, "ckpt")
+    src = os.path.join(scratch_dir(spark, "cpsquote_"), "src")
     events.write.parquet(src)
 
     stream = events_as_quotes(
@@ -1142,16 +1043,7 @@ def streaming_quoted_spread_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
             "max_quoted_spread",
         )
     )
-    with scoped_shuffle_partitions(spark):
-        drain(
-            start_parquet_stream(
-                agg,
-                path=out_path,
-                checkpoint=ckpt,
-                query_name="quoted_spread_1m_stream",
-            )
-        )
-    out = spark.read.parquet(out_path)
+    out = drain_to_parquet(agg, "quoted_spread_1m_stream")
     return out.select(
         fmt_ts("window_start", "window_start"),
         fmt_ts("window_end", "window_end"),
@@ -1276,10 +1168,7 @@ def streaming_order_flow_imbalance_1m(
         return iter([res])
 
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="cpsofi_")
-    src = os.path.join(root, "src")
-    out_path = os.path.join(root, "ofi")
-    ckpt = os.path.join(root, "ckpt")
+    src = os.path.join(scratch_dir(spark, "cpsofi_"), "src")
     events.coalesce(1).write.parquet(src)
 
     stream = events_as_quotes(
@@ -1306,16 +1195,7 @@ def streaming_order_flow_imbalance_1m(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    with scoped_shuffle_partitions(spark, 16):
-        drain(
-            start_parquet_stream(
-                minutes,
-                path=out_path,
-                checkpoint=ckpt,
-                query_name="ofi_1m_stream",
-            )
-        )
-    out = spark.read.schema(minutes.schema).parquet(out_path)
+    out = drain_to_parquet(minutes, "ofi_1m_stream", 16)
     return out.select(
         "symbol",
         fmt_ts(F.timestamp_micros(F.col("window_start_us")), "window_start"),
@@ -1454,25 +1334,13 @@ def streaming_arb_executable_pnl_1m(
     from ..operators.ticks import events_as_quotes
 
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="cpsarb_")
-    src = os.path.join(root, "src")
-    out_path = os.path.join(root, "pnl")
-    ckpt = os.path.join(root, "ckpt")
+    src = os.path.join(scratch_dir(spark, "cpsarb_"), "src")
     events.write.parquet(src)
 
     out_stream = arb_pnl_chained_stream(
         events_as_quotes(read_parquet_stream(spark, src, events.schema))
     )
-    with scoped_shuffle_partitions(spark):
-        drain(
-            start_parquet_stream(
-                out_stream,
-                path=out_path,
-                checkpoint=ckpt,
-                query_name="arb_executable_pnl_1m_stream",
-            )
-        )
-    out = spark.read.schema(out_stream.schema).parquet(out_path)
+    out = drain_to_parquet(out_stream, "arb_executable_pnl_1m_stream")
     return out.select(
         "symbol",
         fmt_ts("window_start", "window_start"),
@@ -1589,10 +1457,7 @@ def streaming_cross_venue_staleness_1m(
         return iter([res])
 
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="cpsstale_")
-    src = os.path.join(root, "src")
-    out_path = os.path.join(root, "stale")
-    ckpt = os.path.join(root, "ckpt")
+    src = os.path.join(scratch_dir(spark, "cpsstale_"), "src")
     events.coalesce(1).write.parquet(src)
 
     stream = events_as_quotes(
@@ -1613,16 +1478,7 @@ def streaming_cross_venue_staleness_1m(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    with scoped_shuffle_partitions(spark, 16):
-        drain(
-            start_parquet_stream(
-                minutes,
-                path=out_path,
-                checkpoint=ckpt,
-                query_name="stale_1m_stream",
-            )
-        )
-    out = spark.read.schema(minutes.schema).parquet(out_path)
+    out = drain_to_parquet(minutes, "stale_1m_stream", 16)
     return out.select(
         "symbol",
         "venue",
@@ -1747,10 +1603,7 @@ def streaming_momentum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         return iter([res])
 
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="cpsmr_")
-    src = os.path.join(root, "src")
-    out_path = os.path.join(root, "replay")
-    ckpt = os.path.join(root, "ckpt")
+    src = os.path.join(scratch_dir(spark, "cpsmr_"), "src")
     events.coalesce(1).write.parquet(src)
 
     stream = events_as_ticks(
@@ -1774,13 +1627,4 @@ def streaming_momentum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    with scoped_shuffle_partitions(spark, 16):
-        drain(
-            start_parquet_stream(
-                summaries,
-                path=out_path,
-                checkpoint=ckpt,
-                query_name="momentum_replay_stream",
-            )
-        )
-    return spark.read.schema(summaries.schema).parquet(out_path)
+    return drain_to_parquet(summaries, "momentum_replay_stream", 16)

@@ -44,6 +44,7 @@ from ..functions.text import (
 )
 from ..operators.dedup import dedup_exact_hash
 from ..operators.partitioning import shared, spread
+from ..session import materialized
 from ..sources.testdata import load_table
 from .registry import register
 
@@ -3070,41 +3071,32 @@ def doc_bloom_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: materialized Bloom filters are BUILT ONCE per sf_dir and probed many
-#: times — same amortization contract as the ANN indexes (the bench
-#: charges the build to a `:index_build` line, the query line measures
-#: the probe alone).
-_BLOOM_INDEX_CACHE: dict[str, str] = {}
-
-
 def _bloom_bits_path(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
-
+    """Materialized Bloom filters are BUILT ONCE per (session, sf_dir)
+    and probed many times — same amortization contract as the ANN
+    indexes (the bench charges the build to a `:index_build` line, the
+    query line measures the probe alone)."""
     from ..operators.bloom_index import write_bloom_bits
 
-    key = os.path.abspath(sf_dir)
-    path = _BLOOM_INDEX_CACHE.get(key)
-    if path is not None and os.path.isdir(path):
-        return path
-    corpus = (
-        spread(_docs(spark, sf_dir), by="doc_id")
-        .filter(
-            F.conv(
-                F.substring(
-                    F.md5(F.col("doc_id").cast("string")), 1, 2
-                ),
-                16,
-                10,
-            ).cast("long")
-            < SPLIT_TRAIN_LT
+    def build(path: str) -> None:
+        corpus = (
+            spread(_docs(spark, sf_dir), by="doc_id")
+            .filter(
+                F.conv(
+                    F.substring(
+                        F.md5(F.col("doc_id").cast("string")), 1, 2
+                    ),
+                    16,
+                    10,
+                ).cast("long")
+                < SPLIT_TRAIN_LT
+            )
+            .select(F.md5(F.lower(F.trim(F.col("text")))).alias("digest"))
+            .distinct()
         )
-        .select(F.md5(F.lower(F.trim(F.col("text")))).alias("digest"))
-        .distinct()
-    )
-    path = tempfile.mkdtemp(prefix="cpbloom_") + "/bloom_bits"
-    write_bloom_bits(corpus, path, m=BF_M, k=BF_K)
-    _BLOOM_INDEX_CACHE[key] = path
-    return path
+        write_bloom_bits(corpus, path, m=BF_M, k=BF_K)
+
+    return materialized(spark, ("bloom", os.path.abspath(sf_dir)), build)
 
 
 @register(

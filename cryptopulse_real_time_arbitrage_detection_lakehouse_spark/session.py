@@ -16,12 +16,22 @@ SURVEY.md M4). Here there is exactly one factory, scale-aware:
 - No Delta Lake session extension: Delta tables are read and written by
   the engine's own log client (``sources/delta``) over plain parquet, so
   session start pulls no extra jars (SURVEY.md S2/K1).
+
+The session also owns every scratch file a query makes: fixture tables,
+streaming checkpoints and drained sinks (`scratch_dir`), and the
+build-once tables queries share (`materialized`). Both live under the
+application's driver temp dir, which Spark deletes on ``spark.stop()``
+and, through its shutdown hook, at JVM exit.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import tempfile
+from collections.abc import Callable
 
+from pyspark import SparkFiles
 from pyspark.sql import SparkSession
 
 
@@ -83,3 +93,37 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _scratch_root(spark: SparkSession) -> str:
+    """``.../spark-<uuid>/userFiles-<uuid>`` of ``spark``'s context
+    (SparkFiles resolves against the process's one live SparkContext)."""
+    return SparkFiles.getRootDirectory()
+
+
+def scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """A fresh, empty directory that lives exactly as long as ``spark``:
+    the place for one query's fixture tables, checkpoints and sinks."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root(spark))
+
+
+def materialized(
+    spark: SparkSession, key: tuple, build: Callable[[str], object]
+) -> str:
+    """Path of a table built once per ``key`` within ``spark``'s life.
+
+    ``key`` (first item a readable kind) names every input the table is
+    a pure function of; the path is derived from it, so a later call
+    with an equal key finds the table and builds nothing. ``build(path)``
+    writes the table at ``path`` inside a sibling scratch dir that is
+    renamed into place only after it returns: a failed build leaves
+    nothing that a later call would reuse.
+    """
+    digest = hashlib.sha1(repr(key).encode()).hexdigest()[:16]
+    name = f"{key[0]}-{digest}"
+    done = os.path.join(_scratch_root(spark), name)
+    if not os.path.isdir(done):
+        staging = scratch_dir(spark, f".{name}.")
+        build(os.path.join(staging, "table"))
+        os.rename(staging, done)
+    return os.path.join(done, "table")

@@ -3756,10 +3756,9 @@ class DeltaTable:
 
         Existing columns take their current names as physical names, so
         every already-written data file still matches; from then on
-        logical names are pure metadata and `rename_column` /
-        `drop_column` are metadata-only commits — the operation column
-        mapping exists for (delta-spark's
-        ``delta.columnMapping.mode = name`` upgrade).
+        logical names are pure metadata and `rename_column` is a
+        metadata-only commit — the operation column mapping exists for
+        (delta-spark's ``delta.columnMapping.mode = name`` upgrade).
         """
         base = self.latest_version() or 0
         meta, _ = self._snapshot_state(None)
@@ -4483,31 +4482,6 @@ class DeltaTable:
             new if c == old else c for c in meta.get("partitionColumns") or []
         ]
         return self._metadata_commit("RENAME COLUMN", new_meta, base=base)
-
-    def drop_column(self, name: str) -> int:
-        """Drop a column without rewriting data — the field leaves the
-        schema; the physical bytes stay in the files and every read
-        prunes them. Requires column mapping; partition columns cannot
-        be dropped."""
-        base = self.latest_version() or 0
-        meta, _ = self._snapshot_state(None)
-        if not self._column_mapping(meta):
-            raise ValueError(
-                "drop_column requires column mapping; call "
-                "enable_column_mapping() first"
-            )
-        if name in (meta.get("partitionColumns") or []):
-            raise ValueError(f"cannot drop partition column {name!r}")
-        schema = json.loads(meta["schemaString"])
-        names = [f["name"] for f in schema["fields"]]
-        if name not in names:
-            raise ValueError(f"no column {name!r} in {names}")
-        if len(names) == 1:
-            raise ValueError("cannot drop the last column")
-        schema["fields"] = [f for f in schema["fields"] if f["name"] != name]
-        new_meta = dict(meta)
-        new_meta["schemaString"] = json.dumps(schema)
-        return self._metadata_commit("DROP COLUMN", new_meta, base=base)
 
     #: spec Type Widening: fromType -> allowed toTypes, all changes an
     #: engine can serve by CASTING at read time with zero information
@@ -7443,27 +7417,6 @@ class DeltaTable:
         _meta, adds = self._snapshot_state(None)
         victims = [a for a in adds if a.get("deletionVector")]
         return self._rewrite_subset(spark, victims, operation="REORG")
-
-    def compact_small_files(
-        self, spark: SparkSession, *, min_file_bytes: int, target_files: int = 1
-    ) -> int | None:
-        """Selective OPTIMIZE (delta-spark's bin-packing semantics):
-        coalesce only the files SMALLER than ``min_file_bytes`` into
-        ``target_files`` per commit, leaving full-size files alone —
-        `compact()`'s whole-table rewrite is the wrong shape once the
-        table holds petabytes of already-well-sized files and the
-        problem is the tail of per-trigger streaming appends. Returns
-        the committed version (None when no file is under the
-        threshold)."""
-        _meta, adds = self._snapshot_state(None)
-        victims = [a for a in adds if int(a.get("size", 0)) < min_file_bytes]
-        if len(victims) < 2 and not any(
-            a.get("deletionVector") for a in victims
-        ):
-            return None  # nothing to coalesce
-        return self._rewrite_subset(
-            spark, victims, operation="OPTIMIZE", target_files=target_files
-        )
 
     def _ensure_v2_checkpoint_feature(self) -> None:
         """Fence the table for V2 checkpoints (reader-writer feature

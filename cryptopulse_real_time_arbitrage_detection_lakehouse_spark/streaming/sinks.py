@@ -10,6 +10,11 @@ The medallion runner still writes checkpointed **parquet append** sinks
 files tracked in ``_spark_metadata``); moving its hops onto
 `start_delta_append_stream` is ROADMAP item 1(b).
 
+Bounded registry streams drain through `drain_to_parquet`: one
+availableNow parquet sink and its checkpoint in a session scratch dir
+(``session.scratch_dir``, gone with ``spark.stop()``), run at a scoped
+shuffle width, and the output read back with the stream's schema.
+
 The Kafka producer sink (K4, the outbound twin of the reference's
 producer ``/root/reference/src/producers/main.py:46-55``) is split into a
 testable envelope transform (`kafka_records`) and a start wrapper
@@ -26,6 +31,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import scratch_dir
+
 #: stateful-drain shuffle width: every micro-batch commits one state-store
 #: delta PER shuffle partition, so a bounded drain pays (partitions ×
 #: batches) commit overheads regardless of data volume. The reference runs
@@ -41,7 +48,7 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int = STREAM_SHUFFLE_PARTI
     """Temporarily set ``spark.sql.shuffle.partitions`` around a bounded
     stream start+drain. Streaming state partitioning is read from the
     session conf when the query's checkpoint is created — the fresh
-    per-call checkpoints in `plans/streaming.py` make this scope exact —
+    per-call checkpoints of `drain_to_parquet` make this scope exact —
     and the prior width is restored for whatever batch work follows, on
     error too. Nested scopes restore LIFO, each the width it displaced."""
     key = "spark.sql.shuffle.partitions"
@@ -240,6 +247,31 @@ def drain(query: StreamingQuery, timeout_sec: int = 300) -> None:
     err = query.exception()
     if err is not None:
         raise err
+
+
+def drain_to_parquet(
+    stream: DataFrame,
+    query_name: str,
+    shuffle_partitions: int = STREAM_SHUFFLE_PARTITIONS,
+) -> DataFrame:
+    """Drain a bounded stream into a fresh scratch parquet sink with
+    trigger(availableNow=True) at ``shuffle_partitions`` and return what
+    it wrote. The read-back takes the stream's schema: a drain that
+    emits nothing commits no data file, and schema inference would fail
+    where the correct answer is empty."""
+    spark = stream.sparkSession
+    root = scratch_dir(spark, f"{query_name}_")
+    out = os.path.join(root, "out")
+    with scoped_shuffle_partitions(spark, shuffle_partitions):
+        drain(
+            start_parquet_stream(
+                stream,
+                path=out,
+                checkpoint=os.path.join(root, "ckpt"),
+                query_name=query_name,
+            )
+        )
+    return spark.read.schema(stream.schema).parquet(out)
 
 
 def write_progress_log(query: StreamingQuery, log_dir: str) -> None:

@@ -29,19 +29,24 @@ from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.session import ( 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
-#: per-test wall-time ceiling (seconds) on the ``call`` phase: 3x the
-#: slowest test (15 s on a 4-core host), so one new slow oracle or fixture
-#: build fails by name instead of quietly eating the suite's time budget
+#: per-test wall-time ceiling (seconds) on the ``setup`` and ``call``
+#: phases: 3x the slowest test (15 s on a 4-core host), so one new slow
+#: oracle, test or class fixture build fails by name instead of quietly
+#: eating the suite's time budget
 CALL_CEILING_S = 45.0
 
 
 @pytest.hookimpl(hookwrapper=True)
 def pytest_runtest_makereport(call):
     report = (yield).get_result()
-    if report.when == "call" and report.passed and call.duration > CALL_CEILING_S:
+    if (
+        report.when in ("setup", "call")
+        and report.passed
+        and call.duration > CALL_CEILING_S
+    ):
         report.outcome = "failed"
         report.longrepr = (
-            f"call phase took {call.duration:.1f} s, over the "
+            f"{report.when} phase took {call.duration:.1f} s, over the "
             f"{CALL_CEILING_S:.0f} s per-test ceiling (tests/conftest.py)"
         )
 

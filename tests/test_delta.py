@@ -2489,7 +2489,7 @@ class TestArrowNullFillOlderNestedFiles:
 class TestReorgAndSelectiveCompact:
     """REORG ... APPLY (PURGE) and selective OPTIMIZE: layout
     maintenance that touches ONLY the files needing it — DV'd files
-    (purge) or under-sized files (bin-packing) — committed
+    (purge) or the partitions an OPTIMIZE ... WHERE names — committed
     dataChange=false."""
 
     def _active(self, t):
@@ -2553,30 +2553,6 @@ class TestReorgAndSelectiveCompact:
         assert got.filter("part = 'a'").count() == 5
         # JVM-free read agrees post-purge
         assert len(t.to_pandas()) == 15
-
-    def test_compact_small_files_leaves_big_ones(self, spark, tmp_path):
-        t = DeltaTable(str(tmp_path / "t"))
-        t.write(spark.range(0, 20000).select("id").coalesce(1))  # big file
-        for i in range(4):  # streaming-append tail of tiny files
-            t.write(spark.range(20000 + i, 20001 + i).select("id").coalesce(1))
-        before = self._active(t)
-        big = {n for n, a in before.items() if int(a["size"]) >= 5000}
-        small = set(before) - big
-        assert len(big) == 1 and len(small) == 4
-        v = t.compact_small_files(spark, min_file_bytes=5000)
-        assert v == t.latest_version()
-        after = self._active(t)
-        assert big <= set(after)            # untouched
-        assert small.isdisjoint(set(after))  # coalesced away
-        assert len(after) == 2               # big + one packed file
-        assert t.read(spark).count() == 20004
-
-    def test_compact_small_files_noop_when_nothing_small(self, spark, tmp_path):
-        t = DeltaTable(str(tmp_path / "t"))
-        t.write(spark.range(0, 20000).select("id").coalesce(1))
-        v_before = t.latest_version()
-        assert t.compact_small_files(spark, min_file_bytes=100) is None
-        assert t.latest_version() == v_before
 
     def test_optimize_where_scopes_to_matching_partitions(
         self, spark, tmp_path

@@ -773,13 +773,14 @@ def test_iterative_plans_use_reliable_checkpoint_when_configured(spark):
     PageRank/LPA still produce identical results. Without a dir, the
     executor-pinned local form is kept (single-JVM loss means process
     death anyway)."""
-    import tempfile
-
     from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.operators.partitioning import (
         shared,
     )
     from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.plans import (
         registry,
+    )
+    from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.session import (
+        scratch_dir,
     )
 
     import os
@@ -796,9 +797,9 @@ def test_iterative_plans_use_reliable_checkpoint_when_configured(spark):
     before_pr = sorted(map(tuple, pr(spark, SF_SMOKE).collect()))
     before_lpa = sorted(map(tuple, lpa(spark, SF_SMOKE).collect()))
 
-    # survives the rest of the session (pytest tmp_path would be GC'd
-    # while the session still checkpoints into it)
-    ckpt = tempfile.mkdtemp(prefix="cp_reliable_ckpt_")
+    # lives exactly as long as the session that checkpoints into it
+    # (pytest's tmp_path could be reclaimed while the session runs)
+    ckpt = scratch_dir(spark, "cp_reliable_ckpt_")
     sc.setCheckpointDir(ckpt)
     rel = shared(spark.range(10), reliable=True)
     assert "ExistingRDD" in rel._jdf.queryExecution().executedPlan().toString()
