@@ -9,6 +9,9 @@ time-travel audits live in ``plans/delta.py``.
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -82,19 +85,24 @@ GROUP BY o.o_orderpriority
     tags=("join", "bucketing", "layout", "relational", "tpch"),
 )
 def bucketed_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid as _uuid
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_extendedprice"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority"
-    )
-    db = f"bkt_{_uuid.uuid4().hex[:10]}"
-    loc = scratch_dir(spark, "cpbkt_")
-    spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
-    write_bucketed(li, f"{db}.li_b", key="l_orderkey", buckets=8)
-    write_bucketed(orders, f"{db}.orders_b", key="o_orderkey", buckets=8)
+    # one catalog database per session and sf_dir, its bucketed tables
+    # written by the first call that finds them absent
+    db = "bkt_" + hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
+    if not spark.catalog.databaseExists(db):
+        loc = scratch_dir(spark, "cpbkt_")
+        spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
+    if not (
+        spark.catalog.tableExists(f"{db}.li_b")
+        and spark.catalog.tableExists(f"{db}.orders_b")
+    ):
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_extendedprice"
+        )
+        orders = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderpriority"
+        )
+        write_bucketed(li, f"{db}.li_b", key="l_orderkey", buckets=8)
+        write_bucketed(orders, f"{db}.orders_b", key="o_orderkey", buckets=8)
     a = spark.table(f"{db}.li_b")
     b = spark.table(f"{db}.orders_b")
     joined = a.join(b, a.l_orderkey == b.o_orderkey)

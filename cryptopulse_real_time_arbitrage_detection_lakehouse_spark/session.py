@@ -16,6 +16,17 @@ SURVEY.md M4). Here there is exactly one factory, scale-aware:
 - No Delta Lake session extension: Delta tables are read and written by
   the engine's own log client (``sources/delta``) over plain parquet, so
   session start pulls no extra jars (SURVEY.md S2/K1).
+- Streaming checkpoints (offsets, commits, source/sink logs, state
+  deltas) are written through Spark's ``FileSystemBasedCheckpointFileManager``
+  instead of the default FileContext-based one. Without libhadoop,
+  Hadoop's local FileContext starts a child ``chmod`` process per file
+  create and four ``readlink`` processes per rename; the FileSystem path
+  renames with no child process (its create still starts the ``chmod``).
+  On a small micro-batch those processes cost more than the data work.
+  What the checkpoint guarantees is kept: every file is still written
+  to a temp file and renamed into place, the ``.crc`` sidecars move
+  with it, and a file already committed is never replaced (the rename
+  checks the destination first and fails if it exists).
 
 The session also owns every scratch file a query makes: fixture tables,
 streaming checkpoints and drained sinks (`scratch_dir`), and the
@@ -80,6 +91,15 @@ def get_spark(
         # checkpoint conf (SURVEY.md section 4.2): strict distribution and
         # min multiple-watermark policy are engine defaults; kept explicit.
         .config("spark.sql.streaming.multipleWatermarkPolicy", "min")
+        # Without libhadoop the default FileContext manager starts a chmod
+        # per create and four readlinks per rename of every checkpoint
+        # file; the FileSystem one renames without a child process and
+        # keeps temp+rename, .crc and no-overwrite.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         # Session-wide by design: parquet TIMESTAMP(NANOS) columns (the
         # testdata's events.ts) read as raw longs; loaders convert
         # ``nanos DIV 1000`` -> microsecond timestamps explicitly. Any raw

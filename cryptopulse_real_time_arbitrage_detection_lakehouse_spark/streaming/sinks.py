@@ -8,7 +8,9 @@ detected in the log) and `start_merge_stream` the MERGE upsert sink.
 The medallion runner still writes checkpointed **parquet append** sinks
 (`start_parquet_stream`: offsets + commits WAL in the checkpoint, output
 files tracked in ``_spark_metadata``); moving its hops onto
-`start_delta_append_stream` is ROADMAP item 1(b).
+`start_delta_append_stream` is ROADMAP item 1(b). Every sink's
+checkpoint files go through the FileSystem-based checkpoint manager
+that ``session.get_spark`` sets (temp file + rename, ``.crc`` kept).
 
 Bounded registry streams drain through `drain_to_parquet`: one
 availableNow parquet sink and its checkpoint in a session scratch dir

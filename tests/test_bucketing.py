@@ -9,11 +9,12 @@ from pyspark.sql import functions as F
 from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.operators.partitioning import (
     write_bucketed,
 )
+from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.plans import registry
 from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.sources.testdata import (
     load_table,
 )
 
-from conftest import SF_SMOKE
+from conftest import SF_ORACLE, SF_SMOKE, assert_oracle_match
 
 
 @pytest.fixture
@@ -79,3 +80,22 @@ def test_partitioned_write_prunes_partitions_on_read(spark, tmp_path):
 
     m = _re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "coinbase" in m.group(1), plan
+
+
+def _bkt_databases(spark) -> set[str]:
+    return {d.name for d in spark.catalog.listDatabases() if d.name.startswith("bkt_")}
+
+
+def test_bucketed_join_audit_keeps_one_database_per_sf_dir(spark, ddb, tmp_path):
+    """Repeated calls on one sf_dir share one catalog database instead of
+    adding one per call, and the row still matches its oracle. The sf_dir
+    is a fresh directory of links to the oracle tables, so its database
+    is new to this session."""
+    for t in ("lineitem", "orders"):
+        (tmp_path / f"{t}.parquet").symlink_to(f"{SF_ORACLE}/{t}.parquet")
+    row = registry.get("bucketed_join_audit")
+    before = _bkt_databases(spark)
+    row.fn(spark, str(tmp_path))
+    df = row.fn(spark, str(tmp_path))
+    assert len(_bkt_databases(spark) - before) == 1
+    assert_oracle_match(df, ddb, row.oracle)

@@ -11,10 +11,16 @@ import sys
 from pathlib import Path
 
 import pyarrow.parquet as pq
+import pytest
+from py4j.protocol import Py4JJavaError
 
 from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.plans import medallion
 from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.session import (
     default_driver_memory,
+)
+from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.streaming.sinks import (
+    drain,
+    start_parquet_stream,
 )
 
 from conftest import SF_SMOKE
@@ -37,6 +43,53 @@ def test_driver_memory_default_fits_the_host():
 def test_session_uses_override_else_derived_default(spark):
     expected = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
     assert spark.sparkContext.getConf().get("spark.driver.memory") == expected
+
+
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing"
+
+
+def _checkpoint_file_manager(spark, path):
+    """The manager Spark's streaming engine resolves for ``path`` from
+    the session's Hadoop conf, as it does at query start."""
+    jvm = spark._jvm
+    manager = getattr(jvm, f"{_CHECKPOINTING}.CheckpointFileManager")
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return manager.create(jvm.org.apache.hadoop.fs.Path(str(path)), hadoop_conf)
+
+
+def test_checkpoints_use_the_filesystem_based_manager(spark, tmp_path):
+    """Local checkpoints go through FileSystem, not FileContext, whose
+    local create and rename start child processes without libhadoop."""
+    fm = _checkpoint_file_manager(spark, tmp_path)
+    assert (
+        fm.getClass().getName()
+        == f"{_CHECKPOINTING}.FileSystemBasedCheckpointFileManager"
+    )
+
+
+def test_checkpoint_file_is_never_overwritten(spark, tmp_path):
+    fm = _checkpoint_file_manager(spark, tmp_path)
+    path = spark._jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    out = fm.createAtomic(path, False)
+    out.write(bytearray(b"committed"))
+    out.close()
+    out = fm.createAtomic(path, False)
+    out.write(bytearray(b"replayed"))
+    with pytest.raises(Py4JJavaError, match="already exists"):
+        out.close()
+    assert (tmp_path / "0").read_bytes() == b"committed"
+
+
+def test_drained_stream_checkpoint_files_keep_crc(spark, tmp_path):
+    src = tmp_path / "src"
+    spark.range(10).write.parquet(str(src))
+    stream = spark.readStream.schema("id BIGINT").parquet(str(src))
+    ckpt = tmp_path / "ckpt"
+    drain(start_parquet_stream(stream, path=str(tmp_path / "out"), checkpoint=str(ckpt)))
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 10
+    for log in ("offsets", "commits"):
+        # the committed file and its checksum; no temp file left behind
+        assert sorted(os.listdir(ckpt / log)) == [".0.crc", "0"]
 
 
 #: one session: a scratch dir, a drain-helper registry row and the gold
