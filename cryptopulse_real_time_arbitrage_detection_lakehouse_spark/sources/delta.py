@@ -2138,8 +2138,6 @@ class DeltaTable:
         every field (`_fieldid_physical_cast`) — the spec's id-mode
         write contract: readers resolve by those ids and ignore the
         staged names entirely."""
-        import pyarrow.parquet as pq
-
         if id_mode:
             df.sparkSession.conf.set(
                 "spark.sql.parquet.fieldId.write.enabled", "true"
@@ -2557,6 +2555,54 @@ class DeltaTable:
         return out
 
     @staticmethod
+    def _identity_alloc(info: dict):
+        """New identity values with ZERO coordination:
+        monotonically_increasing_id is unique per row within the job,
+        so hwm + (mono+1)*step stays on the identity lattice and above
+        the high-water mark. Gaps between partitions are spec-legal
+        (delta-spark leaves them on retries too); the new hwm is read
+        back from the staged footers (`_advance_identity_hwm`)."""
+        return (
+            F.lit(info["highWaterMark"])
+            + (F.monotonically_increasing_id() + 1) * F.lit(info["step"])
+        ).cast("long")
+
+    @staticmethod
+    def _advance_identity_hwm(
+        schema_string: str, id_cols: dict, mapping: dict, adds: list[dict]
+    ) -> tuple[str, bool]:
+        """Spec writer requirement (``identityColumns``): a commit that
+        wrote identity values records each advanced highWaterMark in
+        its own metaData, read back from the staged ``adds``' footer
+        stats (no extra scan). Returns the schema JSON and whether any
+        mark advanced."""
+        schema_json = json.loads(schema_string)
+        advanced = False
+        for col, info in id_cols.items():
+            ext = max if info["step"] > 0 else min
+            key = "maxValues" if info["step"] > 0 else "minValues"
+            # staged footers (and their stats) carry PHYSICAL names on
+            # column-mapped tables — a logical-name lookup finds nothing
+            # and the hwm silently never advances, letting a later
+            # writer re-allocate the same ids
+            phys = mapping.get(col, col)
+            vals = [
+                json.loads(a["stats"])[key][phys]
+                for a in adds
+                if phys in json.loads(a["stats"]).get(key, {})
+            ]
+            if not vals:
+                continue
+            hwm = ext(int(ext(vals)), info["highWaterMark"])
+            if hwm == info["highWaterMark"]:
+                continue
+            fj = next(f for f in schema_json["fields"] if f["name"] == col)
+            fj["metadata"] = dict(fj.get("metadata") or {})
+            fj["metadata"]["delta.identity.highWaterMark"] = hwm
+            advanced = True
+        return json.dumps(schema_json), advanced
+
+    @staticmethod
     def _has_ntz(dt: T.DataType) -> bool:
         """TIMESTAMP_NTZ anywhere in ``dt`` — itself a reader-writer
         feature (spec timestampNtz): a reader unaware of it would
@@ -2633,9 +2679,12 @@ class DeltaTable:
         higher version already exists, the write is a no-op returning the
         current table version; otherwise the commit records the txn so a
         replay after a crash-between-commit-and-checkpoint skips it.
-        """
-        import pyarrow.parquet as pq
 
+        Present generated columns, NOT NULL columns and CHECK
+        constraints are checked in one aggregate before anything is
+        staged (`_refuse_violations`): a violating batch raises
+        ValueError and leaves no file and no version.
+        """
         if mode not in ("append", "overwrite"):
             raise ValueError(f"unsupported mode {mode!r}")
         if txn is not None:
@@ -2688,12 +2737,12 @@ class DeltaTable:
                 # dataChange=False overwrites (OPTIMIZE/Z-ORDER compaction
                 # routed through here) rearrange bytes, not rows — legal
                 self._refuse_if_append_only(prior_meta, "overwrite WRITE")
-            gen = self._generation_exprs(prior_meta)
-            if gen:
-                # compute-or-validate BEFORE constraint/schema checks so
-                # an omitted generated column both passes the schema
-                # comparison and lands with correct values
-                df = self._apply_generated(df, gen)
+            # compute omitted generated columns BEFORE the schema
+            # checks so they both pass the schema comparison and land
+            # with correct values; present ones become guard rules
+            df, rules = self._apply_generated(
+                df, self._generation_exprs(prior_meta)
+            )
             dflts = self._column_defaults(prior_meta)
             fill = sorted(c for c in dflts if c not in df.columns)
             if fill:
@@ -2714,7 +2763,9 @@ class DeltaTable:
                         for c in fill
                     ],
                 )
-            self._check_constraints(df, prior_meta)
+            self._refuse_violations(
+                df, rules + self._constraint_rules(df, prior_meta)
+            )
             mapping = self._column_mapping(prior_meta) or {}
             if partition_by != (prior_meta.get("partitionColumns") or []):
                 raise ValueError(
@@ -2756,7 +2807,8 @@ class DeltaTable:
                 )
 
         if last is None and generated_columns:
-            df = self._apply_generated(df, generated_columns)
+            df, rules = self._apply_generated(df, generated_columns)
+            self._refuse_violations(df, rules)
 
         identity_generated: dict[str, dict] = {}
         if prior_meta is not None:
@@ -2781,22 +2833,7 @@ class DeltaTable:
                     # them, or a later allocation could collide
                     identity_generated[col] = info
                 else:
-                    # distributed allocation with ZERO coordination:
-                    # monotonically_increasing_id is unique per row
-                    # within the job, so hwm + (mono+1)*step stays on
-                    # the identity lattice and above the high-water
-                    # mark. Gaps between partitions are spec-legal
-                    # (delta-spark leaves them on retries too); the new
-                    # hwm is read back from the staged files' OWN
-                    # footer stats — no extra pass over the data.
-                    df = df.withColumn(
-                        col,
-                        (
-                            F.lit(info["highWaterMark"])
-                            + (F.monotonically_increasing_id() + 1)
-                            * F.lit(info["step"])
-                        ).cast("long"),
-                    )
+                    df = df.withColumn(col, self._identity_alloc(info))
                     identity_generated[col] = info
 
         adds = self._stage_files(
@@ -2816,35 +2853,12 @@ class DeltaTable:
             co_partition=optimize_write,
         )
         if identity_generated and adds:
-            # spec writer requirement: an identity write updates the
-            # field's highWaterMark in the SAME commit's metaData —
-            # read back from the staged footers' stats, zero extra scan
-            schema_json = json.loads(
-                new_schema_json or prior_meta["schemaString"]
+            new_schema_json, _ = self._advance_identity_hwm(
+                new_schema_json or prior_meta["schemaString"],
+                identity_generated,
+                mapping,
+                adds,
             )
-            for col, info in identity_generated.items():
-                ext = max if info["step"] > 0 else min
-                key = "maxValues" if info["step"] > 0 else "minValues"
-                # staged footers (and their stats) carry PHYSICAL names
-                # on column-mapped tables — a logical-name lookup finds
-                # nothing and the hwm silently never advances, letting
-                # a later writer re-allocate the same ids
-                phys = mapping.get(col, col)
-                vals = [
-                    json.loads(a["stats"])[key][phys]
-                    for a in adds
-                    if phys in json.loads(a["stats"]).get(key, {})
-                ]
-                if not vals:
-                    continue
-                fj = next(
-                    f for f in schema_json["fields"] if f["name"] == col
-                )
-                fj["metadata"] = dict(fj.get("metadata") or {})
-                fj["metadata"]["delta.identity.highWaterMark"] = ext(
-                    int(ext(vals)), info["highWaterMark"]
-                )
-            new_schema_json = json.dumps(schema_json)
         now_ms = int(time.time() * 1000)
         rt_domain_action: dict | None = None
         if rt_cols is not None:
@@ -3616,8 +3630,8 @@ class DeltaTable:
         if generated_columns:
             # GENERATED ALWAYS AS (expr) in CREATE TABLE — delta-spark's
             # DDL shape; the same field metadata the write-creates-table
-            # path stamps, so _apply_generated/_check recompute and
-            # validate identically whichever way the table was born.
+            # path stamps, so _apply_generated recomputes and validates
+            # identically whichever way the table was born.
             # Writer-v4 feature: older writers must be fenced off or
             # they would append rows violating the generation invariant
             for col, expr in generated_columns.items():
@@ -4624,8 +4638,8 @@ class DeltaTable:
         ``checkConstraints``): record ``delta.constraints.<name>`` in the
         table configuration and upgrade the writer protocol. Every
         subsequent `write`/`merge`/`compact` refuses data violating the
-        expression — validation is a Spark filter + count on the incoming
-        frame (one extra pass over the batch, nothing driver-side). The
+        expression — validated with the table's other rules in one
+        aggregate over the incoming frame (`_refuse_violations`). The
         current contents must already satisfy the constraint."""
         import keyword
 
@@ -5003,58 +5017,52 @@ class DeltaTable:
         )
 
     @staticmethod
-    def _generation_exprs(meta_or_schema) -> dict[str, str]:
-        """column -> ``delta.generationExpression`` from the schemaString
-        (or a parsed meta dict); {} when the table has none."""
-        if isinstance(meta_or_schema, dict) and "schemaString" in meta_or_schema:
-            schema = json.loads(meta_or_schema["schemaString"])
-        else:
-            schema = meta_or_schema
+    def _generation_exprs(meta: dict) -> dict[str, str]:
+        """column -> ``delta.generationExpression`` from the meta's
+        schemaString; {} when the table has none."""
         out: dict[str, str] = {}
-        for f in schema.get("fields", []):
+        for f in json.loads(meta["schemaString"]).get("fields", []):
             expr = (f.get("metadata") or {}).get("delta.generationExpression")
             if expr is not None:
                 out[f["name"]] = expr
         return out
 
     @staticmethod
-    def _column_defaults(meta_or_schema) -> dict[str, str]:
+    def _column_defaults(meta: dict) -> dict[str, str]:
         """column -> SQL default expression from the schemaString's
         ``CURRENT_DEFAULT`` field metadata (spec writer feature
         ``allowColumnDefaults``); {} when the table has none."""
-        if isinstance(meta_or_schema, dict) and "schemaString" in meta_or_schema:
-            schema = json.loads(meta_or_schema["schemaString"])
-        else:
-            schema = meta_or_schema
         out: dict[str, str] = {}
-        for f in schema.get("fields", []):
+        for f in json.loads(meta["schemaString"]).get("fields", []):
             expr = (f.get("metadata") or {}).get("CURRENT_DEFAULT")
             if expr is not None:
                 out[f["name"]] = expr
         return out
 
-    def _apply_generated(self, df: DataFrame, gen: dict[str, str]) -> DataFrame:
+    @staticmethod
+    def _apply_generated(
+        df: DataFrame, gen: dict[str, str]
+    ) -> tuple[DataFrame, list]:
         """Enforce generated columns on a write batch (the
         ``generatedColumns`` writer feature): a MISSING generated column
-        is computed from its expression; a PRESENT one is validated
-        value-by-value and the write refused on any mismatch — a
-        non-enforcing writer would silently break every reader's
-        assumption that the column equals its expression (e.g. partition
-        pruning on a generated date)."""
+        is computed from its expression; a PRESENT one gets a
+        `_refuse_violations` rule refusing any value-by-value mismatch —
+        a non-enforcing writer would silently break every reader's
+        assumption that the column equals its expression (e.g.
+        partition pruning on a generated date)."""
+        rules = []
         for col, expr in sorted(gen.items()):
             if col not in df.columns:
                 df = df.withColumn(col, F.expr(expr))
             else:
-                n_bad = df.filter(
-                    ~(F.col(f"`{col}`").eqNullSafe(F.expr(expr)))
-                ).count()
-                if n_bad:
-                    raise ValueError(
-                        f"generated column {col!r} does not match its "
-                        f"expression {expr!r} on {n_bad} row(s); write "
-                        "refused (omit the column to have it computed)"
-                    )
-        return df
+                rules.append((
+                    ~F.col(f"`{col}`").eqNullSafe(F.expr(expr)),
+                    f"generated column {col!r} does not match its "
+                    f"expression {expr!r} on ",
+                    " row(s); write refused (omit the column to have it "
+                    "computed)",
+                ))
+        return df, rules
 
     #: writer features this client actually implements — the spec's
     #: writer contract: a table listing anything else must be REFUSED
@@ -5100,35 +5108,49 @@ class DeltaTable:
                 f"{sorted(unknown)} this client does not implement"
             )
 
-    def _check_constraints(self, df: DataFrame, meta: dict) -> None:
-        """Refuse a write whose batch violates any recorded constraint —
-        the writer-side contract every engine honoring ``checkConstraints``
-        must enforce (a non-enforcing writer would silently corrupt the
-        table's invariant for every reader). Also enforces the
-        ``invariants`` feature's NOT NULL contract: a null landing in a
-        column the schema declares non-nullable is exactly the silent
-        corruption the feature fences."""
+    @staticmethod
+    def _constraint_rules(df: DataFrame, meta: dict) -> list:
+        """`_refuse_violations` rules for the recorded constraints — the
+        writer-side contract of ``checkConstraints`` and of the
+        ``invariants`` feature's NOT NULL (a non-enforcing writer would
+        silently corrupt the invariant for every reader). A NOT NULL
+        rule on a column ``df`` already declares non-nullable cannot
+        fail and is left out."""
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        for f in schema.fields:
-            if not f.nullable and f.name in df.columns:
-                n_null = df.filter(F.col(f"`{f.name}`").isNull()).count()
-                if n_null:
-                    raise ValueError(
-                        f"NOT NULL constraint on {f.name!r} violated by "
-                        f"{n_null} row(s); write refused"
-                    )
+        incoming = {f.name: f.nullable for f in df.schema.fields}
+        rules = [
+            (
+                F.col(f"`{f.name}`").isNull(),
+                f"NOT NULL constraint on {f.name!r} violated by ",
+                " row(s); write refused",
+            )
+            for f in schema.fields
+            if not f.nullable and incoming.get(f.name, False)
+        ]
         conf = meta.get("configuration") or {}
         for key, expr in sorted(conf.items()):
-            if not key.startswith("delta.constraints."):
-                continue
-            name = key[len("delta.constraints."):]
-            # SQL CHECK semantics: NULL passes, only FALSE violates
-            n_bad = df.filter(~F.coalesce(F.expr(expr), F.lit(True))).count()
-            if n_bad:
-                raise ValueError(
-                    f"CHECK constraint {name!r} ({expr}) violated by "
-                    f"{n_bad} row(s); write refused"
-                )
+            if key.startswith("delta.constraints."):
+                name = key[len("delta.constraints."):]
+                # SQL CHECK semantics: NULL passes, only FALSE violates
+                rules.append((
+                    ~F.coalesce(F.expr(expr), F.lit(True)),
+                    f"CHECK constraint {name!r} ({expr}) violated by ",
+                    " row(s); write refused",
+                ))
+        return rules
+
+    @staticmethod
+    def _refuse_violations(df: DataFrame, rules: list) -> None:
+        """The one write guard. ``rules`` are ``(violation Column, head,
+        tail)``; all predicates are counted in ONE aggregate, and the
+        first rule with violating rows raises ``ValueError(head + n +
+        tail)``. No rule, no job. Run before staging, so a refused
+        batch leaves no file and no version."""
+        if rules:
+            counts = df.select(*[F.count_if(r[0]) for r in rules]).first()
+            for n, (_bad, head, tail) in zip(counts, rules):
+                if n:
+                    raise ValueError(f"{head}{n}{tail}")
 
     def _build_file_dvs(
         self,
@@ -5467,8 +5489,9 @@ class DeltaTable:
         ``set_exprs`` maps column name -> SQL expression string or
         Column, evaluated against the matched rows' CURRENT values.
         Updates may move rows across partitions (the new image restages
-        under its new partition directory). CHECK constraints validate
-        the updated images before anything commits. Returns the
+        under its new partition directory). SET generated columns, NOT
+        NULL and CHECK constraints validate the updated images in one
+        aggregate before anything is staged. Returns the
         committed version; a no-match update still commits (delta-spark
         semantics), and ``txn`` makes replays no-ops."""
         if txn is not None:
@@ -5541,23 +5564,23 @@ class DeltaTable:
         )
         # generated columns: recompute any not explicitly SET (their
         # sources may have changed); validate any that were SET directly
+        rules = []
         for col, gexpr in sorted(self._generation_exprs(meta).items()):
             if col in set_exprs:
-                n_bad = updated.filter(
-                    ~(F.col(f"`{col}`").eqNullSafe(F.expr(gexpr)))
-                ).count()
-                if n_bad:
-                    raise ValueError(
-                        f"UPDATE sets generated column {col!r} to values "
-                        f"violating its expression {gexpr!r} on {n_bad} "
-                        "row(s); omit it to have it recomputed"
-                    )
+                rules.append((
+                    ~F.col(f"`{col}`").eqNullSafe(F.expr(gexpr)),
+                    f"UPDATE sets generated column {col!r} to values "
+                    f"violating its expression {gexpr!r} on ",
+                    " row(s); omit it to have it recomputed",
+                ))
             else:
                 updated = updated.withColumn(
                     col,
                     F.expr(gexpr).cast(self._strip_meta(col_types[col])),
                 )
-        self._check_constraints(updated, meta)
+        self._refuse_violations(
+            updated, rules + self._constraint_rules(updated, meta)
+        )
 
         file_dvs = self._build_file_dvs(spark, cond, adds, version=base)
         n_updated = sum(r["n_new"] for r in file_dvs)
@@ -6097,8 +6120,10 @@ class DeltaTable:
         transfer, `_build_file_dvs`) and the replacement rows append as
         new files — ONE atomic commit; rows outside the predicate are
         never restaged. A file whose every row matches drops outright
-        (no sidecar). Generated columns recompute, CHECK constraints
-        validate, and CDF tables get true delete+insert change images.
+        (no sidecar). Omitted generated columns recompute; present ones,
+        NOT NULL, CHECK constraints and the predicate itself validate in
+        one aggregate before anything is staged; CDF tables get true
+        delete+insert change images.
         ``txn`` makes replays no-ops (streaming foreachBatch upserts).
         Lost commit races retry automatically iff every winning commit
         is a pure append whose stats refute ``condition``
@@ -6135,10 +6160,7 @@ class DeltaTable:
         )
         self._refuse_unknown_writer_features(protocol, "REPLACE WHERE")
         self._refuse_if_append_only(meta, "REPLACE WHERE")
-        gen = self._generation_exprs(meta)
-        if gen:
-            df = self._apply_generated(df, gen)
-        self._check_constraints(df, meta)
+        df, rules = self._apply_generated(df, self._generation_exprs(meta))
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
         prior_types = {f.name: f.dataType for f in schema.fields}
         for f in df.schema.fields:
@@ -6158,13 +6180,18 @@ class DeltaTable:
         if missing:
             raise ValueError(f"replace_where frame lacks columns {missing}")
         cond = F.expr(condition)
-        n_outside = df.filter(~cond.eqNullSafe(F.lit(True))).count()
-        if n_outside:
-            raise ValueError(
-                f"{n_outside} row(s) of the replacement frame do not "
-                f"satisfy the replaceWhere predicate {condition!r} "
-                "(NULL predicates count as non-matching)"
-            )
+        self._refuse_violations(
+            df,
+            rules
+            + self._constraint_rules(df, meta)
+            + [(
+                ~cond.eqNullSafe(F.lit(True)),
+                "",
+                " row(s) of the replacement frame do not satisfy the "
+                f"replaceWhere predicate {condition!r} (NULL predicates "
+                "count as non-matching)",
+            )],
+        )
         part_cols = meta.get("partitionColumns") or []
         mapping = self._column_mapping(meta) or {}
         cdc_actions: list[dict] = []
@@ -8227,7 +8254,8 @@ class DeltaMergeBuilder:
         ``txnAppId``/``txnVersion`` write options): a replayed
         (appId, version) becomes a no-op — the foreachBatch
         streaming-upsert contract, where a crashed micro-batch replays
-        its merge verbatim."""
+        its merge verbatim. The rows to stage are checked against NOT
+        NULL and CHECK constraints in one aggregate before staging."""
         t = self._t
         if not (self._matched or self._not_matched or self._by_source):
             raise ValueError("MERGE needs at least one WHEN clause")
@@ -8526,18 +8554,10 @@ class DeltaMergeBuilder:
                     extra_cols=ins_extra,
                 )
                 if id_need_gen:
-                    # same zero-coordination lattice allocation as
-                    # write(): hwm + (mono+1)*step is unique within the
-                    # job and strictly past the high-water mark; applied
-                    # BEFORE persist so staging and CDC images see one
-                    # consistent assignment
+                    # applied BEFORE persist so staging and CDC images
+                    # see one consistent assignment
                     for colname, acts in sorted(id_need_gen.items()):
-                        info = id_cols[colname]
-                        alloc = (
-                            F.lit(info["highWaterMark"])
-                            + (F.monotonically_increasing_id() + 1)
-                            * F.lit(info["step"])
-                        ).cast("long")
+                        alloc = t._identity_alloc(id_cols[colname])
                         inserts = inserts.withColumn(
                             colname,
                             F.when(
@@ -8567,7 +8587,7 @@ class DeltaMergeBuilder:
                         colname,
                         F.expr(gexpr).cast(t._strip_meta(col_types[colname])),
                     )
-                t._check_constraints(final, meta)
+                t._refuse_violations(final, t._constraint_rules(final, meta))
 
             touched_bytes = sum(
                 int(a.get("size") or 0)
@@ -8672,42 +8692,15 @@ class DeltaMergeBuilder:
             if inserts is not None:
                 inserts.unpersist()
 
-        # spec writer requirement (identityColumns): a commit that wrote
-        # identity values records the advanced highWaterMark in the SAME
-        # commit's metaData — read back from the staged footers' stats
-        # exactly like write() (copied rows are <= the old hwm, so the
-        # ext() clamp keeps them inert; explicit BY DEFAULT inserts past
-        # the hwm advance it too, preventing future collisions)
+        # copied rows are <= the old hwm, so the clamp keeps them inert;
+        # metaData is emitted only when an identity mark moved
         id_meta_updated = False
         if id_cols and new_adds:
-            schema_json = json.loads(meta["schemaString"])
-            # staged stats carry PHYSICAL names on mapped tables (same
-            # fix as write(): a logical-name lookup silently skips the
-            # hwm advance and later allocations could collide)
-            id_mapping = t._column_mapping(meta) or {}
-            for colname, info in id_cols.items():
-                ext = max if info["step"] > 0 else min
-                key = "maxValues" if info["step"] > 0 else "minValues"
-                phys = id_mapping.get(colname, colname)
-                vals = [
-                    json.loads(a["stats"])[key][phys]
-                    for a in new_adds
-                    if phys in json.loads(a["stats"]).get(key, {})
-                ]
-                if not vals:
-                    continue
-                new_hwm = ext(int(ext(vals)), info["highWaterMark"])
-                if new_hwm == info["highWaterMark"]:
-                    continue
-                fj = next(
-                    f for f in schema_json["fields"] if f["name"] == colname
-                )
-                fj["metadata"] = dict(fj.get("metadata") or {})
-                fj["metadata"]["delta.identity.highWaterMark"] = new_hwm
-                id_meta_updated = True
+            schema_string, id_meta_updated = t._advance_identity_hwm(
+                meta["schemaString"], id_cols, mapping, new_adds
+            )
             if id_meta_updated:
-                meta = dict(meta)
-                meta["schemaString"] = json.dumps(schema_json)
+                meta = {**meta, "schemaString": schema_string}
 
         now_ms = int(time.time() * 1000)
         by_name = {

@@ -163,16 +163,22 @@ class TestDriverSideListing:
     @pytest.fixture(scope="class")
     def built(self, spark, tmp_path_factory):
         """A table of N one-row appends (one also holds a null key) and
-        its rows; tests copy it before they write."""
+        its rows; tests copy it before they write. The frames come from
+        pyarrow tables: a frame from a Python list runs a Python worker
+        job, whose fixed cost would dominate the fixture."""
+        import pyarrow as pa
+
         path = str(tmp_path_factory.mktemp("listing") / "t")
         t = DeltaTable(path)
         rows = []
         for i in range(self.N):
             batch = [(i, f"v{i}")] + ([(None, "null-key")] if i == 7 else [])
             rows += batch
-            t.write(
-                spark.createDataFrame(batch, "k long, v string").coalesce(1)
+            k, v = zip(*batch)
+            arrow = pa.table(
+                {"k": pa.array(k, pa.int64()), "v": pa.array(v, pa.string())}
             )
+            t.write(spark.createDataFrame(arrow, "k long, v string").coalesce(1))
         return path, rows
 
     @staticmethod
@@ -1299,6 +1305,127 @@ class TestCheckConstraints:
             spark.createDataFrame([(500, "S0")], "id long, sym string"), ["id"]
         )
         assert t.read(spark).filter(F.col("id") == 500).count() == 1
+
+
+class TestWriteGuard:
+    """Every refusal rule of a Delta write (generated column, NOT NULL,
+    CHECK, replaceWhere predicate) is counted in one aggregate before
+    anything is staged."""
+
+    @staticmethod
+    def _frame(spark, lo, hi, nullable=False):
+        """Three columns, all non-nullable unless ``nullable``."""
+        cols = {"id": F.col("id"), "a": F.col("id") * 2, "b": F.col("id") % 3}
+        return spark.range(lo, hi).select(
+            *[
+                (F.when(c >= 0, c) if nullable else c).alias(name)
+                for name, c in cols.items()
+            ]
+        ).coalesce(1)
+
+    def _table(self, spark, path, checks=(), nullable=False):
+        t = DeltaTable(path)
+        t.write(self._frame(spark, 0, 10, nullable))
+        for i, expr in enumerate(checks):
+            t.add_check_constraint(f"c{i}", expr)
+        return t
+
+    @staticmethod
+    def _refused(t, build, message):
+        """``build()`` raises ``message`` and leaves no version and no
+        staged file behind."""
+        before = t.latest_version()
+        with pytest.raises(ValueError) as err:
+            build()
+        assert str(err.value) == message
+        assert t.latest_version() == before
+        assert not [d for d in os.listdir(t.path) if d.startswith("_stage-")]
+
+    def test_guard_jobs_do_not_grow_with_rules(self, spark, tmp_path):
+        t = self._table(spark, str(tmp_path / "t"), ["id >= 0"])
+        _, one, _ = listing_jobs(
+            spark, "guard-one", lambda: t.write(self._frame(spark, 10, 20))
+        )
+        for i, expr in enumerate(["a >= 0", "b < 3", "a = 2 * id"], 1):
+            t.add_check_constraint(f"c{i}", expr)
+        # four CHECKs plus three NOT NULL rules on nullable input
+        _, seven, _ = listing_jobs(
+            spark,
+            "guard-seven",
+            lambda: t.write(self._frame(spark, 20, 30, nullable=True)),
+        )
+        assert one == seven
+        assert t.read(spark).count() == 30
+
+    def test_no_rule_that_can_fail_runs_no_guard_job(
+        self, spark, tmp_path, monkeypatch
+    ):
+        # nullable and unconstrained; non-nullable fed non-nullable input
+        plain = self._table(spark, str(tmp_path / "plain"), nullable=True)
+        strict = self._table(spark, str(tmp_path / "strict"))
+
+        def append_jobs(group):
+            return [
+                listing_jobs(
+                    spark,
+                    f"{group}-{nullable}",
+                    lambda: t.write(self._frame(spark, 10, 20, nullable)),
+                )[1]
+                for t, nullable in ((plain, True), (strict, False))
+            ]
+
+        guarded = append_jobs("guarded")
+        monkeypatch.setattr(
+            DeltaTable, "_refuse_violations", staticmethod(lambda df, r: None)
+        )
+        assert guarded == append_jobs("unguarded")
+
+    def test_refusals_stage_nothing(self, spark, tmp_path):
+        t = self._table(spark, str(tmp_path / "w"), ["id >= 0"])
+        self._refused(
+            t,
+            lambda: t.write(self._frame(spark, -1, 0)),
+            "CHECK constraint 'c0' (id >= 0) violated by 1 row(s); "
+            "write refused",
+        )
+        gen = DeltaTable(str(tmp_path / "g"))
+        gen.write(
+            spark.range(0, 10).select("id"),
+            generated_columns={"g": "CAST(id % 2 AS STRING)"},
+        )
+        self._refused(
+            gen,
+            lambda: gen.update(spark, "id = 3", {"g": "'9'"}),
+            "UPDATE sets generated column 'g' to values violating its "
+            "expression 'CAST(id % 2 AS STRING)' on 1 row(s); omit it to "
+            "have it recomputed",
+        )
+        rw = self._table(spark, str(tmp_path / "rw"))
+        self._refused(
+            rw,
+            lambda: rw.replace_where(self._frame(spark, 3, 7), "id < 5"),
+            "2 row(s) of the replacement frame do not satisfy the "
+            "replaceWhere predicate 'id < 5' (NULL predicates count as "
+            "non-matching)",
+        )
+        m = self._table(spark, str(tmp_path / "m"), ["id < 100"])
+        self._refused(
+            m,
+            lambda: m.merge(self._frame(spark, 8, 101), ["id"]),
+            "CHECK constraint 'c0' (id < 100) violated by 1 row(s); "
+            "write refused",
+        )
+
+    def test_generated_rule_reported_before_check(self, spark, tmp_path):
+        t = DeltaTable(str(tmp_path / "t"))
+        t.write(
+            spark.range(0, 10).select("id"),
+            generated_columns={"g": "CAST(id % 2 AS STRING)"},
+        )
+        t.add_check_constraint("id_nonneg", "id >= 0")
+        bad = spark.range(-3, 0).select("id", F.lit("9").alias("g"))
+        with pytest.raises(ValueError, match="^generated column 'g'"):
+            t.write(bad)
 
 
 class TestTimestampTravelAndTxn:
