@@ -9,8 +9,8 @@ This module is the single CLI a migrating user drives instead:
     python -m ... query gold_candles_1m --sf-dir /root/testdata/sf0.001
     python -m ... list [--tag text]
 
-``pipeline`` runs the bronze→silver→gold medallion as sequential
-``availableNow`` drains; ``--log-dir`` writes each hop's progress records
+``pipeline`` runs the bronze → {silver, gold} medallion as
+``availableNow`` drains, silver and gold together; ``--log-dir`` writes each hop's progress records
 to ``<log-dir>/<query name>.log``. ``query`` executes any
 registered operator and shows rows (the ``check_*`` scripts' role).
 ``list`` prints the registry — the catalog of everything the engine runs.

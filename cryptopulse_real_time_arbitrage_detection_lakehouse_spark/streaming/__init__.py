@@ -8,8 +8,9 @@ function shared with the batch/oracle path, and this package adds only the
 stream plumbing around them: bounded sources for tests
 (``trigger(availableNow=True)`` drains), checkpointed append sinks, the
 watermark policy, and one pipeline runner, `run_medallion_available_now`,
-which drains the hops in turn and can log each hop's per-batch progress
-records. The pytest streaming suite proves stream==batch
+which drains bronze, then silver and gold together from bronze, builds
+their streaming plans once per session, and can log each hop's
+per-batch progress records. The pytest streaming suite proves stream==batch
 equivalence, watermark late-data semantics, and checkpoint-restart
 idempotence (SURVEY.md section 5.2.3).
 """

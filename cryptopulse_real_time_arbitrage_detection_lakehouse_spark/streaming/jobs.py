@@ -5,26 +5,38 @@ Twin of the reference's job trio (``ingestion_bronze.py:54-63``,
 difference: each hop is the SAME pure transform the batch/oracle path uses
 (`operators.silver.parse_bronze_ticks`, `operators.gold.candles`), so
 stream==batch equivalence is a testable property instead of a hope. The
-runner chains the hops with ``availableNow`` drains — the reference runs
-them as three concurrent OS processes communicating through tables
-(SURVEY.md section 3.1); sequential bounded drains give identical results
-over bounded input, since each hop's exactly-once recovery comes from its
-checkpoint and WAL whether or not the hops overlap in time.
+runner drains bronze with ``availableNow``, then runs silver and gold
+together, both reading bronze: the topology is bronze -> {silver, gold}.
+Gold applies the same row-wise silver parse to bronze that the silver
+hop writes, so its candles are those of the silver table row for row,
+and it no longer waits for silver to finish. The reference runs its jobs
+as concurrent OS processes communicating through tables (SURVEY.md
+section 3.1); each query here keeps its own checkpoint and WAL, which
+is what gives it exactly-once recovery whether or not the queries
+overlap in time. A session builds the streaming plans of one medallion
+once and reuses them on every later call.
 """
 
 from __future__ import annotations
 
+import json
 import os
+from collections import OrderedDict
+from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.gold import candles
 from ..operators.silver import parse_bronze_ticks, with_audit_column
-from ..schemas import BRONZE_SCHEMA, KAFKA_SHAPED_SCHEMA, SILVER_SCHEMA
+from ..schemas import BRONZE_SCHEMA, KAFKA_SHAPED_SCHEMA
 from .sinks import drain, start_parquet_stream, write_progress_log
 from .sources import read_parquet_stream
 
 DEFAULT_WATERMARK = "10 minutes"  # gold_layer.py:56 (README claims 10s; code wins)
+#: medallions whose streaming plans one session keeps; the least recently
+#: run one is dropped first
+PLAN_MEMO_SIZE = 8
 
 
 def bronze_ingest(kafka_shaped: DataFrame, *, audit: bool = True) -> DataFrame:
@@ -82,6 +94,62 @@ def dedup_ticks_stream(
     )
 
 
+@dataclass
+class _MedallionPlans:
+    """One medallion's streaming DataFrames. Silver and gold read the
+    bronze table, which the first bronze drain creates, so they are
+    built after it."""
+
+    bronze: DataFrame
+    silver: DataFrame | None = None
+    gold: DataFrame | None = None
+
+
+def _refuse_chained_gold(out_root: str) -> None:
+    """Raise if gold's checkpoint comes from the bronze -> silver -> gold
+    chain: its file-source log lists silver files, so reading bronze it
+    would take every bronze file as new and count open windows twice."""
+    log_dir = os.path.join(out_root, "_checkpoints", "gold", "sources", "0")
+    if not os.path.isdir(log_dir):
+        return
+    bronze = os.path.abspath(os.path.join(out_root, "bronze")) + os.sep
+    for name in os.listdir(log_dir):
+        if name.startswith("."):
+            continue
+        with open(os.path.join(log_dir, name), encoding="utf-8") as fh:
+            entries = fh.read().splitlines()[1:]  # the first line is the log version
+        for entry in entries:
+            path = os.path.abspath(unquote(urlparse(json.loads(entry)["path"]).path))
+            if not path.startswith(bronze):
+                raise ValueError(
+                    f"{out_root}: the gold checkpoint was written by the "
+                    f"bronze -> silver -> gold chain (its source log lists "
+                    f"{path}); gold now reads {bronze} and would count those "
+                    "rows again. Remove gold and its checkpoint to rebuild it."
+                )
+
+
+def _medallion_plans(
+    spark: SparkSession, raw_dir: str, out_root: str, watermark: str
+) -> _MedallionPlans:
+    """The session's plans for this medallion, built on its first call.
+
+    They live on the session object, so another session never sees them,
+    and at most `PLAN_MEMO_SIZE` medallions are kept. A gold checkpoint
+    is vetted by `_refuse_chained_gold` before its plans are first built.
+    """
+    memo = vars(spark).setdefault("_medallion_plans", OrderedDict())
+    key = (raw_dir, out_root, watermark)
+    if key not in memo:
+        _refuse_chained_gold(out_root)
+        raw = read_parquet_stream(spark, raw_dir, KAFKA_SHAPED_SCHEMA)
+        memo[key] = _MedallionPlans(bronze=bronze_ingest(raw))
+        while len(memo) > PLAN_MEMO_SIZE:
+            memo.popitem(last=False)
+    memo.move_to_end(key)
+    return memo[key]
+
+
 def run_medallion_available_now(
     spark: SparkSession,
     *,
@@ -91,12 +159,19 @@ def run_medallion_available_now(
     timeout_sec: int = 300,
     log_dir: str | None = None,
 ) -> dict[str, str]:
-    """Drain raw Kafka-shaped parquet through bronze -> silver -> gold.
+    """Drain raw Kafka-shaped parquet into bronze, then bronze into silver
+    and gold together.
 
-    Each hop is an independent checkpointed streaming query over the
-    previous hop's table — the reference's process topology, bounded. Rerun
-    with the same ``out_root``: checkpoints make every hop incremental and
-    idempotent (T5).
+    Each hop is an independent checkpointed streaming query: bronze reads
+    the raw files, silver and gold both read bronze's table, and gold
+    parses bronze with `silver_stream` before its candles, so gold equals
+    the candles of the silver table. Rerun with the same ``out_root``:
+    checkpoints make every hop incremental and idempotent (T5). The
+    session builds the three streaming DataFrames once per
+    (``raw_dir``, ``out_root``, ``watermark``) and reuses them. A gold
+    checkpoint written when gold read silver is refused with a
+    ``ValueError`` before any query starts. If silver or gold fails, the
+    other is stopped and the first error found is raised.
 
     With ``log_dir`` set, each hop's drained batches are appended to
     ``<log_dir>/<query_name>.log`` (``bronze_ingest``, ``silver_parse``,
@@ -109,21 +184,30 @@ def run_medallion_available_now(
     """
     paths = {layer: os.path.join(out_root, layer) for layer in ("bronze", "silver", "gold")}
     ckpt = {layer: os.path.join(out_root, "_checkpoints", layer) for layer in paths}
+    plans = _medallion_plans(spark, raw_dir, out_root, watermark)
 
-    def hop(df: DataFrame, layer: str, query_name: str) -> None:
-        query = start_parquet_stream(
-            df, path=paths[layer], checkpoint=ckpt[layer], query_name=query_name
-        )
-        drain(query, timeout_sec)
+    def run_together(*hops: tuple[DataFrame, str, str]) -> None:
+        queries = []
+        try:
+            for df, layer, query_name in hops:
+                queries.append(start_parquet_stream(
+                    df, path=paths[layer], checkpoint=ckpt[layer], query_name=query_name
+                ))
+            for query in queries:
+                drain(query, timeout_sec)
+        except BaseException:
+            for query in queries:
+                query.stop()
+            raise
         if log_dir is not None:
-            write_progress_log(query, log_dir)
+            for query in queries:
+                write_progress_log(query, log_dir)
 
-    raw = read_parquet_stream(spark, raw_dir, KAFKA_SHAPED_SCHEMA)
-    hop(bronze_ingest(raw), "bronze", "bronze_ingest")
-    bronze = read_parquet_stream(spark, paths["bronze"], BRONZE_SCHEMA)
-    hop(silver_stream(bronze), "silver", "silver_parse")
-    silver = read_parquet_stream(spark, paths["silver"], SILVER_SCHEMA)
-    hop(gold_stream(silver, watermark=watermark), "gold", "gold_candles")
+    run_together((plans.bronze, "bronze", "bronze_ingest"))
+    if plans.gold is None:
+        silver = silver_stream(read_parquet_stream(spark, paths["bronze"], BRONZE_SCHEMA))
+        plans.silver, plans.gold = silver, gold_stream(silver, watermark=watermark)
+    run_together((plans.silver, "silver", "silver_parse"), (plans.gold, "gold", "gold_candles"))
     return paths
 
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from datetime import datetime, timezone
 from decimal import Decimal
 
@@ -26,6 +27,7 @@ from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.operators.observa
     observe_stream,
 )
 from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.schemas import (
+    BRONZE_SCHEMA,
     KAFKA_SHAPED_SCHEMA,
     SILVER_SCHEMA,
 )
@@ -39,6 +41,7 @@ from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.streaming import 
     silver_stream,
     start_parquet_stream,
 )
+from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.streaming import jobs
 from cryptopulse_real_time_arbitrage_detection_lakehouse_spark.streaming.sinks import (
     drain,
     scoped_shuffle_partitions,
@@ -116,6 +119,53 @@ def tick(symbol: str, ts: datetime, trade_id: int, price: str = "100.5") -> tupl
     )
 
 
+def land_raw_minutes(spark, raw_dir: str, first: int, last: int) -> None:
+    """Append the raw ticks of event minutes ``first``..``last`` - 1 to
+    ``raw_dir`` as new files (one increment of a landing feed)."""
+    minute = F.minute("timestamp")
+    make_raw_ticks(spark, n=20 * last).filter(minute >= first).write.mode(
+        "append"
+    ).parquet(raw_dir)
+
+
+GOLD_COLUMNS = (
+    "window_start", "window_end", "symbol", "open", "high", "low", "close",
+    "trade_count", "sum_pv", "sum_volume", "vwap",
+)
+
+
+def sorted_rows(df) -> list[tuple]:
+    return sorted(tuple(map(str, r)) for r in df.select(*GOLD_COLUMNS).collect())
+
+
+def tree(root) -> dict[str, tuple[int, int]]:
+    """Every file under ``root``: relative path -> (size, mtime in ns)."""
+    return {
+        str(p.relative_to(root)): (p.stat().st_size, p.stat().st_mtime_ns)
+        for p in root.rglob("*")
+        if p.is_file()
+    }
+
+
+def run_chained_medallion(spark, raw_dir: str, out_root: str) -> None:
+    """The runner's former topology: bronze -> silver -> gold, each hop
+    reading the table the hop before it wrote."""
+    hops = [
+        (raw_dir, KAFKA_SHAPED_SCHEMA, bronze_ingest, "bronze"),
+        (os.path.join(out_root, "bronze"), BRONZE_SCHEMA, silver_stream, "silver"),
+        (os.path.join(out_root, "silver"), SILVER_SCHEMA, gold_stream, "gold"),
+    ]
+    for source, schema, transform, layer in hops:
+        drain(
+            start_parquet_stream(
+                transform(read_parquet_stream(spark, source, schema)),
+                path=os.path.join(out_root, layer),
+                checkpoint=os.path.join(out_root, "_checkpoints", layer),
+            ),
+            120,
+        )
+
+
 def read_out(spark, path):
     return spark.read.schema(None or spark.read.parquet(path).schema).parquet(path)
 
@@ -173,6 +223,23 @@ class TestMedallionStreamEqualsBatch:
         paths = run_medallion_available_now(spark, raw_dir=raw_dir, out_root=out_root)
         assert spark.read.parquet(paths["gold"]).count() == first
 
+    def test_gold_equals_candles_of_silver_over_increments(self, spark, tmp_path):
+        """Gold reads bronze, not silver, yet after every call it holds
+        exactly the batch candles of the silver table, restricted to the
+        windows the watermark has finalised: no window lost or counted
+        twice as raw files land in three increments."""
+        raw_dir, out_root = str(tmp_path / "raw"), str(tmp_path / "out")
+        for first, last in ((0, 10), (10, 20), (20, 30)):
+            land_raw_minutes(spark, raw_dir, first, last)
+            paths = run_medallion_available_now(spark, raw_dir=raw_dir, out_root=out_root)
+            silver = spark.read.parquet(paths["silver"])
+            horizon = silver.agg(
+                F.max("trade_timestamp") - F.expr("INTERVAL 10 MINUTES")
+            ).collect()[0][0]
+            expected = sorted_rows(candles(silver).filter(F.col("window_end") <= horizon))
+            assert sorted_rows(spark.read.parquet(paths["gold"])) == expected
+        assert len(expected) == 3 * 19  # minutes 0-18 of 3 symbols are final
+
 
 class TestDrain:
     def test_failed_hop_surfaces_through_drain(self, spark, tmp_path):
@@ -196,6 +263,27 @@ class TestDrain:
             drain(q, 120)
         assert not q.isActive
         assert not [a for a in spark.streams.active if a.id == q.id]
+
+    @pytest.mark.parametrize("failing", ["silver_parse", "gold_candles"])
+    def test_failed_medallion_hop_stops_the_other(
+        self, spark, tmp_path, monkeypatch, failing
+    ):
+        """Silver and gold run together: when one fails, the runner
+        raises its error and leaves no query running."""
+        raw_dir = str(tmp_path / "raw")
+        make_raw_ticks(spark, n=400).write.parquet(raw_dir)
+
+        def start(df, *, query_name, **kwargs):
+            if query_name == failing:
+                df = df.filter(F.raise_error(F.lit(f"{failing} crash")).isNull())
+            return start_parquet_stream(df, query_name=query_name, **kwargs)
+
+        monkeypatch.setattr(jobs, "start_parquet_stream", start)
+        with pytest.raises(Exception, match=f"{failing} crash"):
+            run_medallion_available_now(
+                spark, raw_dir=raw_dir, out_root=str(tmp_path / "out"), timeout_sec=120
+            )
+        assert not spark.streams.active
 
     def test_progress_log_reconciles_with_observe_counters(self, spark, tmp_path):
         """A drained query's JSON progress log and its observe() audit metrics
@@ -227,6 +315,69 @@ class TestDrain:
         input_total = sum(r["numInputRows"] for r in records)
         written = spark.read.parquet(out).count()
         assert observed_total == written == input_total == 60
+
+
+class TestMedallionPlans:
+    @pytest.fixture
+    def builds(self, monkeypatch) -> list[str]:
+        """The paths of every streaming source the runner builds."""
+        built: list[str] = []
+
+        def counting(spark, path, schema, **kwargs):
+            built.append(path)
+            return read_parquet_stream(spark, path, schema, **kwargs)
+
+        monkeypatch.setattr(jobs, "read_parquet_stream", counting)
+        return built
+
+    def test_plans_are_built_once_per_key(self, spark, tmp_path, monkeypatch, builds):
+        """A call with a known (raw_dir, out_root, watermark) builds no
+        plan; another out_root or watermark builds its own, and the
+        least recently run medallion leaves the bounded memo first."""
+        monkeypatch.setattr(jobs, "PLAN_MEMO_SIZE", 2)
+        raw_dir = str(tmp_path / "raw")
+        make_raw_ticks(spark, n=100).write.parquet(raw_dir)
+        a, b = str(tmp_path / "a"), str(tmp_path / "b")
+
+        def call(out_root, watermark="10 minutes") -> int:
+            builds.clear()
+            run_medallion_available_now(
+                spark, raw_dir=raw_dir, out_root=out_root, watermark=watermark
+            )
+            return len(builds)
+
+        assert call(a) == 2  # raw, then bronze after bronze first drains
+        assert call(a) == 0
+        assert call(b) == 2
+        assert call(a, "5 minutes") == 2
+        assert call(a) == 2  # dropped: (a, 10 minutes) was the least recent
+
+    def test_another_session_builds_its_own_plans(self, spark, tmp_path, builds):
+        """The memo lives on the session: a new session over the same
+        medallion builds its plans again."""
+        raw_dir, out_root = str(tmp_path / "raw"), str(tmp_path / "out")
+        make_raw_ticks(spark, n=100).write.parquet(raw_dir)
+        run_medallion_available_now(spark, raw_dir=raw_dir, out_root=out_root)
+        other = spark.newSession()
+        builds.clear()
+        run_medallion_available_now(other, raw_dir=raw_dir, out_root=out_root)
+        assert len(builds) == 2
+
+    def test_chained_gold_checkpoint_is_refused(self, spark, tmp_path):
+        """A gold checkpoint written when gold read silver lists silver
+        files; resumed on bronze it would count every open window again,
+        so the runner refuses it before any query starts."""
+        raw_dir, out = str(tmp_path / "raw"), tmp_path / "out"
+        land_raw_minutes(spark, raw_dir, 0, 20)
+        run_chained_medallion(spark, raw_dir, str(out))
+        land_raw_minutes(spark, raw_dir, 20, 30)
+        before = tree(out)
+        assert any(p.startswith("gold/part-") for p in before)
+
+        with pytest.raises(ValueError, match=re.escape(str(out))):
+            run_medallion_available_now(spark, raw_dir=raw_dir, out_root=str(out))
+        assert tree(out) == before
+        assert not spark.streams.active
 
 
 class TestWatermarkSemantics:
