@@ -13,15 +13,14 @@ and it no longer waits for silver to finish. The reference runs its jobs
 as concurrent OS processes communicating through tables (SURVEY.md
 section 3.1); each query here keeps its own checkpoint and WAL, which
 is what gives it exactly-once recovery whether or not the queries
-overlap in time. A session builds the streaming plans of one medallion
-once and reuses them on every later call.
+overlap in time. A session keeps the streaming plans of the medallion
+it ran last and reuses them on every later call of that medallion.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from collections import OrderedDict
 from dataclasses import dataclass
 from urllib.parse import unquote, urlparse
 
@@ -34,9 +33,6 @@ from .sinks import drain, start_parquet_stream, write_progress_log
 from .sources import read_parquet_stream
 
 DEFAULT_WATERMARK = "10 minutes"  # gold_layer.py:56 (README claims 10s; code wins)
-#: medallions whose streaming plans one session keeps; the least recently
-#: run one is dropped first
-PLAN_MEMO_SIZE = 8
 
 
 def bronze_ingest(kafka_shaped: DataFrame, *, audit: bool = True) -> DataFrame:
@@ -105,21 +101,32 @@ class _MedallionPlans:
     gold: DataFrame | None = None
 
 
-def _refuse_chained_gold(out_root: str) -> None:
+def _refuse_chained_gold(spark: SparkSession, out_root: str) -> None:
     """Raise if gold's checkpoint comes from the bronze -> silver -> gold
     chain: its file-source log lists silver files, so reading bronze it
-    would take every bronze file as new and count open windows twice."""
-    log_dir = os.path.join(out_root, "_checkpoints", "gold", "sources", "0")
-    if not os.path.isdir(log_dir):
+    would take every bronze file as new and count open windows twice.
+
+    The log is read through the Hadoop FileSystem of ``out_root``, the
+    one the queries write through, so a URI such as ``file:///lake`` is
+    vetted like a plain path, and a scheme with no FileSystem raises
+    here instead of skipping the check."""
+    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
+    log_dir = hadoop_path(os.path.join(out_root, "_checkpoints", "gold", "sources", "0"))
+    fs = log_dir.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(log_dir):
         return
-    bronze = os.path.abspath(os.path.join(out_root, "bronze")) + os.sep
-    for name in os.listdir(log_dir):
-        if name.startswith("."):
+    bronze = fs.makeQualified(hadoop_path(os.path.join(out_root, "bronze")))
+    bronze = bronze.toUri().getPath().rstrip("/") + "/"
+    for status in fs.listStatus(log_dir):
+        if status.getPath().getName().startswith("."):
             continue
-        with open(os.path.join(log_dir, name), encoding="utf-8") as fh:
-            entries = fh.read().splitlines()[1:]  # the first line is the log version
-        for entry in entries:
-            path = os.path.abspath(unquote(urlparse(json.loads(entry)["path"]).path))
+        stream = fs.open(status.getPath())
+        try:
+            text = bytes(stream.readAllBytes()).decode("utf-8")
+        finally:
+            stream.close()
+        for entry in text.splitlines()[1:]:  # the first line is the log version
+            path = unquote(urlparse(json.loads(entry)["path"]).path)
             if not path.startswith(bronze):
                 raise ValueError(
                     f"{out_root}: the gold checkpoint was written by the "
@@ -134,20 +141,20 @@ def _medallion_plans(
 ) -> _MedallionPlans:
     """The session's plans for this medallion, built on its first call.
 
-    They live on the session object, so another session never sees them,
-    and at most `PLAN_MEMO_SIZE` medallions are kept. A gold checkpoint
-    is vetted by `_refuse_chained_gold` before its plans are first built.
+    The session keeps the plans of the medallion it ran last, on the
+    session object, so another session never sees them; a call with
+    another (``raw_dir``, ``out_root``, ``watermark``) replaces them. A
+    gold checkpoint is vetted by `_refuse_chained_gold` before its plans
+    are built.
     """
-    memo = vars(spark).setdefault("_medallion_plans", OrderedDict())
     key = (raw_dir, out_root, watermark)
-    if key not in memo:
-        _refuse_chained_gold(out_root)
+    memo = vars(spark).get("_medallion_plans")
+    if memo is None or memo[0] != key:
+        _refuse_chained_gold(spark, out_root)
         raw = read_parquet_stream(spark, raw_dir, KAFKA_SHAPED_SCHEMA)
-        memo[key] = _MedallionPlans(bronze=bronze_ingest(raw))
-        while len(memo) > PLAN_MEMO_SIZE:
-            memo.popitem(last=False)
-    memo.move_to_end(key)
-    return memo[key]
+        memo = (key, _MedallionPlans(bronze=bronze_ingest(raw)))
+        vars(spark)["_medallion_plans"] = memo
+    return memo[1]
 
 
 def run_medallion_available_now(
@@ -167,8 +174,9 @@ def run_medallion_available_now(
     parses bronze with `silver_stream` before its candles, so gold equals
     the candles of the silver table. Rerun with the same ``out_root``:
     checkpoints make every hop incremental and idempotent (T5). The
-    session builds the three streaming DataFrames once per
-    (``raw_dir``, ``out_root``, ``watermark``) and reuses them. A gold
+    session keeps the three streaming DataFrames of its last
+    (``raw_dir``, ``out_root``, ``watermark``) and reuses them while that
+    key stays the same; another key rebuilds them. A gold
     checkpoint written when gold read silver is refused with a
     ``ValueError`` before any query starts. If silver or gold fails, the
     other is stopped and the first error found is raised.

@@ -269,7 +269,11 @@ class TestDrain:
         self, spark, tmp_path, monkeypatch, failing
     ):
         """Silver and gold run together: when one fails, the runner
-        raises its error and leaves no query running."""
+        raises its error and leaves no query running. Only the
+        ``silver_parse`` case checks the stop: silver is drained first,
+        so when gold fails silver has already finished on its own, and
+        the ``gold_candles`` case checks only that gold's error comes
+        through."""
         raw_dir = str(tmp_path / "raw")
         make_raw_ticks(spark, n=400).write.parquet(raw_dir)
 
@@ -330,11 +334,9 @@ class TestMedallionPlans:
         monkeypatch.setattr(jobs, "read_parquet_stream", counting)
         return built
 
-    def test_plans_are_built_once_per_key(self, spark, tmp_path, monkeypatch, builds):
-        """A call with a known (raw_dir, out_root, watermark) builds no
-        plan; another out_root or watermark builds its own, and the
-        least recently run medallion leaves the bounded memo first."""
-        monkeypatch.setattr(jobs, "PLAN_MEMO_SIZE", 2)
+    def test_plans_are_built_once_per_key(self, spark, tmp_path, builds):
+        """A second call with the same (raw_dir, out_root, watermark)
+        builds no plan; another out_root or watermark rebuilds them."""
         raw_dir = str(tmp_path / "raw")
         make_raw_ticks(spark, n=100).write.parquet(raw_dir)
         a, b = str(tmp_path / "a"), str(tmp_path / "b")
@@ -350,7 +352,7 @@ class TestMedallionPlans:
         assert call(a) == 0
         assert call(b) == 2
         assert call(a, "5 minutes") == 2
-        assert call(a) == 2  # dropped: (a, 10 minutes) was the least recent
+        assert call(a, "5 minutes") == 0
 
     def test_another_session_builds_its_own_plans(self, spark, tmp_path, builds):
         """The memo lives on the session: a new session over the same
@@ -363,10 +365,12 @@ class TestMedallionPlans:
         run_medallion_available_now(other, raw_dir=raw_dir, out_root=out_root)
         assert len(builds) == 2
 
-    def test_chained_gold_checkpoint_is_refused(self, spark, tmp_path):
+    @pytest.mark.parametrize("as_uri", [False, True], ids=["path", "file_uri"])
+    def test_chained_gold_checkpoint_is_refused(self, spark, tmp_path, as_uri):
         """A gold checkpoint written when gold read silver lists silver
         files; resumed on bronze it would count every open window again,
-        so the runner refuses it before any query starts."""
+        so the runner refuses it before any query starts, whether
+        ``out_root`` is a plain path or a ``file:`` URI."""
         raw_dir, out = str(tmp_path / "raw"), tmp_path / "out"
         land_raw_minutes(spark, raw_dir, 0, 20)
         run_chained_medallion(spark, raw_dir, str(out))
@@ -374,8 +378,9 @@ class TestMedallionPlans:
         before = tree(out)
         assert any(p.startswith("gold/part-") for p in before)
 
-        with pytest.raises(ValueError, match=re.escape(str(out))):
-            run_medallion_available_now(spark, raw_dir=raw_dir, out_root=str(out))
+        out_root = out.as_uri() if as_uri else str(out)
+        with pytest.raises(ValueError, match=re.escape(out_root)):
+            run_medallion_available_now(spark, raw_dir=raw_dir, out_root=out_root)
         assert tree(out) == before
         assert not spark.streams.active
 
