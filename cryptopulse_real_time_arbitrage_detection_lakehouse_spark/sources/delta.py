@@ -1672,11 +1672,16 @@ class DeltaTable:
         delta-rs ``DeltaTable(path).to_pandas()``,
         ``/root/reference/src/dashboard/app.py:31-32``).
 
-        Reads the active data files with pyarrow and injects partition
-        columns from the log's hive-encoded partitionValues. A client
-        (dashboard, notebook) can read any table this engine wrote without
-        starting Spark. ``columns`` prunes the parquet read; ``version``
-        time-travels like `read`.
+        Reads the active data files on the driver through the pydelta
+        source's file reader (`pyds._read_partition`), so every file-level
+        rule — column mapping, null-filled pre-evolution columns, deletion
+        vectors, type widening — is the one that source applies, and
+        partition columns come back TYPED from the log's partitionValues
+        (a date partition is a ``datetime.date``, as in
+        ``read(spark).toPandas()``). A client (dashboard, notebook) can
+        read any table this engine wrote without starting Spark.
+        ``columns`` prunes the parquet read (a name not in the schema
+        raises); ``version`` time-travels like `read`.
 
         ``shredded`` maps a VARIANT column name to a struct DDL
         (``"k: long, t: string"``): on variantShredding tables the
@@ -1686,178 +1691,60 @@ class DeltaTable:
         source's explicit read schema.
         """
         import pandas as pd
-        import pyarrow.parquet as pq
+        import pyarrow as pa
+
+        from . import pyds
 
         meta, adds = self._snapshot_state(version)
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        shred_structs: dict[str, T.StructType] = {}
-        for name, ddl in (shredded or {}).items():
-            f = schema[name]
-            if not isinstance(f.dataType, T.VariantType):
+        for name in shredded or {}:
+            dt = schema[name].dataType
+            if not isinstance(dt, T.VariantType):
                 raise ValueError(
                     f"shredded= names column {name!r}, which is "
-                    f"{f.dataType.simpleString()}, not variant"
+                    f"{dt.simpleString()}, not variant"
                 )
-            shred_structs[name] = T._parse_datatype_string(ddl)
-        if shred_structs and self._column_mapping(meta):
-            raise NotImplementedError(
-                "shredded-variant to_pandas on a column-mapped table is "
-                "not supported; unmap or use the pydelta source"
-            )
-        remaining = T.StructType(
-            [f for f in schema.fields if f.name not in shred_structs]
-        )
-        if self._has_variant(remaining):
-            raise NotImplementedError(
-                "to_pandas cannot read VARIANT columns as variants "
-                "(pyarrow does not recognize the parquet VARIANT logical "
-                "type); use the Spark read path — or, on a SHREDDED "
-                "table, pass shredded={column: struct_ddl} to serve the "
-                "typed paths from the typed_value leaves"
-            )
-        part_cols = meta.get("partitionColumns") or []
-        mapping = self._column_mapping(meta) or {}
-        phys = lambda c: mapping.get(c, c)  # noqa: E731
-        out_names = [f.name for f in schema.fields if columns is None or f.name in columns]
-        data_cols = [c for c in out_names if c not in part_cols]
-
-        def conv(raw: str | None, dt: T.DataType):
-            if raw is None or raw == _HIVE_NULL:
-                return None
-            if isinstance(dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
-                return int(raw)
-            if isinstance(dt, (T.DoubleType, T.FloatType)):
-                return float(raw)
-            if isinstance(dt, T.BooleanType):
-                return raw == "true"
-            return raw  # strings, dates, timestamps stay hive-encoded text
-
-        types = {f.name: f.dataType for f in schema.fields}
-        mode = self._mapping_mode(meta)
-        field_ids = (
-            {
-                f.name: int((f.metadata or {})["delta.columnMapping.id"])
+        unknown = [c for c in columns or [] if c not in schema.fieldNames()]
+        if unknown:
+            raise ValueError(f"columns {unknown} are not in the table schema")
+        shredded = shredded or {}
+        read_schema = T.StructType(
+            [
+                T.StructField(f.name, T._parse_datatype_string(shredded[f.name]))
+                if f.name in shredded
+                else f
                 for f in schema.fields
-            }
-            if mode == "id"
-            else {}
+                if columns is None or f.name in columns
+            ]
         )
-        pieces = []
-        for a in adds:
-            fp = os.path.join(self.path, urllib.parse.unquote(a["path"]))
-            if mode == "id":
-                # resolve by the footer's parquet field ids (file column
-                # names are arbitrary in id mode)
-                by_id = {}
-                for fld in pq.read_schema(fp):
-                    fid = (fld.metadata or {}).get(b"PARQUET:field_id")
-                    if fid is not None:
-                        by_id[int(fid)] = fld.name
-                try:
-                    file_cols = [by_id[field_ids[c]] for c in data_cols]
-                except KeyError as exc:
-                    raise ValueError(
-                        f"id-mapped table: field id {exc} absent from {fp}"
-                    ) from None
-                tbl = pq.read_table(fp, columns=file_cols or None)
-            else:
-                # a pre-evolution file lacks columns added later
-                # (merge_schema / MERGE with_schema_evolution): request
-                # only what the footer has and NULL-fill the rest —
-                # requesting a missing column crashes the read, where
-                # Delta semantics say NULL (same contract as the
-                # pydelta reader)
-                present = set(pq.read_schema(fp).names)
-                tbl = pq.read_table(
-                    fp,
-                    columns=[c for c in (phys(c) for c in data_cols)
-                             if c in present] or None,
-                )
-                absent = [c for c in data_cols if phys(c) not in present]
-                if absent:
-                    import pyarrow as pa
-                    from pyspark.sql.pandas.types import to_arrow_type
-
-                    for c in absent:
-                        tbl = tbl.append_column(
-                            phys(c),
-                            pa.nulls(
-                                tbl.num_rows,
-                                type=to_arrow_type(
-                                    self._strip_meta(types[c])
-                                ),
-                            ),
-                        )
-                    # restore declared order (absents appended at the end)
-                    tbl = tbl.select([phys(c) for c in data_cols])
-            if shred_structs:
-                import pyarrow as pa
-
-                from .shredding import _is_shredded_layout, unshred_struct_array
-
-                for i, c in enumerate(data_cols):
-                    want = shred_structs.get(c)
-                    if want is None:
-                        continue
-                    col = tbl.column(i).combine_chunks()
-                    if not _is_shredded_layout(col.type):
-                        raise NotImplementedError(
-                            f"column {c!r} in {fp} is not stored in the "
-                            "shredded layout; the binary variant is "
-                            "unreadable here — use the Spark read path"
-                        )
-                    arr = unshred_struct_array(col, want, _spark_to_arrow_type)
-                    tbl = tbl.set_column(i, pa.field(c, arr.type), arr)
-            if mapping:
-                # nested struct fields read under PHYSICAL names; rebuild
-                # positionally to logical (struct-cast twin, arrow-side)
-                import pyarrow as pa
-
-                for i, c in enumerate(data_cols):
-                    col = tbl.column(i)
-                    if _arrow_names_differ(col.type, types[c]):
-                        arr = _arrow_to_logical_names(
-                            col.combine_chunks(), types[c]
-                        )
-                        tbl = tbl.set_column(i, pa.field(c, arr.type), arr)
-            widened = {
-                f.name
-                for f in schema.fields
-                if (f.metadata or {}).get("delta.typeChanges")
-            }
-            if widened:
-                # typeWidening: files predating the widen carry the
-                # NARROW physical type; conform to the declared logical
-                # type so every piece concatenates at the same width
-                import pyarrow as pa
-                from pyspark.sql.pandas.types import to_arrow_type
-
-                for i, c in enumerate(data_cols):
-                    if c in widened:
-                        want = to_arrow_type(types[c])
-                        if tbl.column(i).type != want:
-                            tbl = tbl.set_column(
-                                i,
-                                pa.field(c, want),
-                                tbl.column(i).cast(want),
-                            )
-            pdf = tbl.to_pandas()
-            pdf.columns = data_cols if data_cols else pdf.columns
-            if a.get("deletionVector"):
-                from . import dv as _dv
-
-                gone = _dv.resolve_dv_rows(self.path, a["deletionVector"])
-                # row indexes are positions within THIS file
-                pdf = pdf.drop(index=[i for i in gone if i < len(pdf)])
-                pdf = pdf.reset_index(drop=True)
-            pv = a.get("partitionValues") or {}
-            for c in part_cols:
-                if c in out_names:
-                    pdf[c] = conv(pv.get(phys(c)), types[c])
-            pieces.append(pdf[out_names] if out_names else pdf)
-        if not pieces:
-            return pd.DataFrame(columns=out_names)
-        return pd.concat(pieces, ignore_index=True)
+        plan = pyds._FilePlan(
+            self.path,
+            meta,
+            read_schema,
+            variant_refusal="to_pandas cannot read VARIANT columns as "
+            "variants (pyarrow does not recognize the parquet VARIANT "
+            "logical type); use the Spark read path — or, on a SHREDDED "
+            "table, pass shredded={column: struct_ddl} to serve the "
+            "typed paths from the typed_value leaves",
+        )
+        batches = [
+            b for a in adds for b in pyds._read_partition(plan.partition(a), plan)
+        ]
+        if not batches:
+            return pd.DataFrame(columns=plan.col_order)
+        # files may disagree on a column's nullability, which
+        # Table.from_batches would refuse (and RecordBatch.cast drops the
+        # rows of a zero-column batch, so cast only where needed)
+        schema = pa.unify_schemas([b.schema for b in batches])
+        pdf = pa.Table.from_batches(
+            [b if b.schema == schema else b.cast(schema) for b in batches],
+            schema,
+        ).to_pandas(coerce_temporal_nanoseconds=True)
+        # timestamps come back as ``read(spark).toPandas()`` under the
+        # engine's UTC session returns them: tz-naive UTC wall time
+        for c in pdf.select_dtypes("datetimetz"):
+            pdf[c] = pdf[c].dt.tz_localize(None)
+        return pdf
 
     @staticmethod
     def _path_partition_values(rel_path: str, part_cols: list[str]) -> dict | None:
@@ -6816,6 +6703,65 @@ class DeltaTable:
                 deleted.append(f"_sidecars/{name}")
         return deleted
 
+    def _change_walk(self, first: int, last: int):
+        """The one change-feed walk, shared by `read_changes` (JVM scans)
+        and the pydelta readers (`pyds._plan_cdf_partitions`). Yields
+        ``(version, cdc, inserts, dv_readds, removed)`` for each commit in
+        ``first..last``: its spec ``cdc`` actions, which are then its ONLY
+        change rows (synthesizing from its adds/removes too would
+        double-count); else its ``dataChange`` adds of new paths, its
+        ``dataChange`` re-adds of paths it also removed as ``(add, prior
+        add)`` pairs (a DV delta), and the prior adds of paths it removed
+        without re-adding. ``dataChange=false`` (OPTIMIZE) actions only move file
+        state.
+
+        Per-path state replays from version 0, so every commit JSON from
+        0 through ``last`` must exist: a prefix expired by
+        cleanup_metadata refuses LOUDLY — replaying from a hole would turn
+        a DV re-add of a pre-checkpoint file into a full-file insert and
+        drop the deletes of its removal, a partial feed no consumer can
+        detect (delta-spark raises the same way when startingVersion
+        predates log retention)."""
+        missing = sorted(set(range(last + 1)) - set(self._commit_versions()))
+        if missing:
+            raise ValueError(
+                f"change feed over versions 0..{last} needs every commit "
+                f"JSON, but {missing[:5]}{'...' if len(missing) > 5 else ''} "
+                "are not in the log (expired by cleanup_metadata?)"
+            )
+        live: dict[str, dict] = {}
+        for v in range(last + 1):
+            actions = self._read_commit(v)
+            removed: dict[str, dict] = {}
+            for action in actions:
+                if "remove" in action:
+                    rm = action["remove"]
+                    prior = live.pop(rm["path"], None)
+                    if prior is not None and rm.get("dataChange", True):
+                        removed[rm["path"]] = prior
+            inserts: list[dict] = []
+            dv_readds: list[tuple[dict, dict]] = []
+            for action in actions:
+                if "add" in action:
+                    add = action["add"]
+                    prior = removed.pop(add["path"], None)
+                    live[add["path"]] = add
+                    if not add.get("dataChange", True):
+                        continue
+                    if prior is None:
+                        inserts.append(add)
+                    else:
+                        dv_readds.append((add, prior))
+            if v < first:
+                continue
+            cdc = [a["cdc"] for a in actions if "cdc" in a]
+            if cdc:
+                yield v, cdc, [], [], []
+            else:
+                yield v, [], inserts, dv_readds, [
+                    p for _, p in sorted(removed.items())
+                ]
+
     def read_changes(
         self,
         spark: SparkSession,
@@ -6827,7 +6773,8 @@ class DeltaTable:
         ``table_changes`` for a table without CDC files): every data
         change in commits ``starting_version..ending_version`` as rows
         tagged ``_change_type`` ('insert' | 'delete') and
-        ``_commit_version``.
+        ``_commit_version``. The commits come from `_change_walk`, the
+        walk the pydelta change feeds plan from too.
 
         Per commit: ``dataChange=true`` adds contribute their rows as
         inserts — minus rows already dead in the file's OWN deletion
@@ -6848,37 +6795,10 @@ class DeltaTable:
         without CDC files, no updates are synthesized (the physical log
         has no row identity) — a MERGE shows as delete+insert pairs.
         """
-        from . import dv as _dv
-
         last = self.latest_version()
         if last is None:
             raise ValueError(f"empty table: {self.path}")
         end = last if ending_version is None else ending_version
-        # CDF needs every commit JSON from 0 through the window's end:
-        # the window's own commits supply the changes, and the prefix
-        # supplies the per-path file state DV-deltas diff against. A
-        # prefix expired by cleanup_metadata must fail LOUDLY here —
-        # silently replaying from a hole would emit a partial feed a
-        # downstream consumer has no way to detect (delta-spark raises
-        # the same way when startingVersion predates log retention).
-        missing = sorted(set(range(end + 1)) - set(self._commit_versions()))
-        if missing:
-            raise ValueError(
-                f"change feed over versions 0..{end} needs every commit "
-                f"JSON, but {missing[:5]}{'...' if len(missing) > 5 else ''} "
-                "are not in the log (expired by cleanup_metadata?)"
-            )
-
-        # replay to just before the window, tracking per-path state
-        live: dict[str, dict] = {}
-        for v in self._commit_versions():
-            if v >= starting_version:
-                break
-            for action in self._read_commit(v):
-                if "add" in action:
-                    live[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    live.pop(action["remove"]["path"], None)
 
         meta, _adds = self._snapshot_state(None)
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
@@ -6897,10 +6817,9 @@ class DeltaTable:
             d = a.get("deletionVector")
             return _dv.resolve_dv_blob(self.path, d) if d else None
 
-        # per-TABLE constants hoisted out of the per-file reader (they were
-        # recomputed per file; review finding) — and kept textually next to
-        # it so the mapping/HIVE-null conventions stay in lockstep with
-        # `_scan` and `to_pandas`
+        # per-TABLE constants hoisted out of the per-file reader, kept
+        # textually next to it so the mapping/HIVE-null conventions stay
+        # in lockstep with `_scan`
         mapping = self._column_mapping(meta) or {}
         phys = lambda c: mapping.get(c, c)  # noqa: E731
         part_cols = meta.get("partitionColumns") or []
@@ -7053,48 +6972,12 @@ class DeltaTable:
                 *[f.name for f in schema.fields], "_change_type"
             ).withColumn("_commit_version", F.lit(v).cast("long"))
 
-        for v in self._commit_versions():
-            if v < starting_version or v > end:
-                if v > end:
-                    break
-                continue
-            removed_this_commit: dict[str, dict] = {}
-            actions_v = self._read_commit(v)  # one read per commit
-            # a commit carrying cdc actions provides its OWN change rows:
-            # per the spec, readers must use them EXCLUSIVELY for that
-            # commit (synthesizing from remove/add too would double-count)
-            cdc_in_commit = [a["cdc"] for a in actions_v if "cdc" in a]
-            for action in actions_v:
-                if "remove" in action:
-                    path = action["remove"]["path"]
-                    prior = live.pop(path, None)
-                    if prior is not None and action["remove"].get(
-                        "dataChange", True
-                    ):
-                        removed_this_commit[path] = prior
-            dv_deltas: list[tuple[dict, dict]] = []  # (re-add, prior)
-            inserts: list[dict] = []
-            for action in actions_v:
-                if "add" not in action:
-                    continue
-                a = action["add"]
-                path = a["path"]
-                prior = removed_this_commit.pop(path, None)
-                live[path] = a
-                if cdc_in_commit or not a.get("dataChange", True):
-                    continue
-                if prior is not None:
-                    # same path re-added: a DV delta — emit ONLY the newly
-                    # deleted positions (new DV minus old DV)
-                    dv_deltas.append((a, prior))
-                else:
-                    inserts.append(a)
-            if cdc_in_commit:
-                for c in cdc_in_commit:
-                    pieces.append(cdc_rows(c, v))
-                continue
-            # one scan + one distributed position join per change class
-            # per commit — never one plan branch per file
+        # one scan + one distributed position join per change class per
+        # commit — never one plan branch per file
+        for v, cdc, inserts, dv_readds, removed in self._change_walk(
+            starting_version, end
+        ):
+            pieces.extend(cdc_rows(c, v) for c in cdc)
             if inserts:
                 pieces.append(
                     tag(
@@ -7110,18 +6993,19 @@ class DeltaTable:
                         v,
                     )
                 )
-            if dv_deltas:
+            if dv_readds:
+                # emit ONLY the newly deleted positions (new DV minus old)
                 pieces.append(
                     tag(
                         batch_rows(
-                            [a for a, _ in dv_deltas],
+                            [a for a, _ in dv_readds],
                             [
                                 (
                                     _basename(a["path"]),
                                     dv_blob(a),
                                     dv_blob(prior),
                                 )
-                                for a, prior in dv_deltas
+                                for a, prior in dv_readds
                             ],
                             "left_semi",
                         ),
@@ -7129,9 +7013,6 @@ class DeltaTable:
                         v,
                     )
                 )
-            removed = [
-                prior for _, prior in sorted(removed_this_commit.items())
-            ]
             if removed:
                 # removed without re-add: their then-live rows are deletes
                 pieces.append(

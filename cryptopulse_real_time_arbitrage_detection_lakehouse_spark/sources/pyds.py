@@ -20,6 +20,11 @@ instead of around it:
   by row position, renames physical->logical columns (column mapping),
   and injects typed partition values.
 
+That file reader (`_read_partition`, planned by `_FilePlan`) is the
+engine's one pure-Python Delta reader: `DeltaTable.to_pandas` runs it on
+the driver, without Spark, and the change feeds plan from the same
+commit walk as `DeltaTable.read_changes` (`DeltaTable._change_walk`).
+
 The source is read-only, with two surfaces: batch read
 (`PyDeltaReader`, including batch change data feed and shredded-variant
 reads) and LOG-TAILING streaming read (`PyDeltaStreamReader` — offsets
@@ -214,90 +219,156 @@ def _lower_opts(options: dict) -> dict:
     return {str(k).lower(): v for k, v in dict(options).items()}
 
 
+#: the change-feed columns a readChangeFeed read schema ends with
+_CDF_COLS = ("_change_type", "_commit_version")
+
+
+class _FilePlan:
+    """Everything a pydelta read derives from (log metadata, read schema,
+    ``where``), computed once and shared by the batch reader, the stream
+    reader and `DeltaTable.to_pandas`: Spark and Arrow types, the
+    declared output order, the physical->logical map, id-mode field ids,
+    the STRICT conjunct parse, and the read task for one add. It travels
+    to executors inside the reader, so it holds no add list.
+
+    ``where`` is STRICT-parsed: this reader's row filtering IS the
+    conjunct list (nothing re-applies the predicate above the scan), so
+    a predicate that does not fully decompose must error, never silently
+    under-filter. A read schema that declares a STRUCT for a log-VARIANT
+    column selects shredded-variant mode: the executor unshreds the
+    files' typed_value leaves into that struct (sources/shredding.py;
+    residual binaries refuse there). Any other VARIANT in the read schema
+    refuses with ``variant_refusal``."""
+
+    def __init__(
+        self,
+        root: str,
+        meta: dict,
+        schema: T.StructType,
+        where: str | None = None,
+        *,
+        variant_refusal: str,
+    ) -> None:
+        log_schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
+        self.root = root
+        self.part_cols = meta.get("partitionColumns") or []
+        self.mapping = DeltaTable._column_mapping(meta) or {}
+        self.phys_path = _phys_path_fn(meta)
+        self.conjuncts: list[tuple[str, str, object]] = (
+            _parse_conjuncts_strict(where) if where else []
+        )
+        self.spark_types = {f.name: f.dataType for f in log_schema.fields}
+        self.shredded = {
+            f.name
+            for f in schema.fields
+            if isinstance(self.spark_types.get(f.name), T.VariantType)
+            and isinstance(f.dataType, T.StructType)
+        }
+        if self.shredded and self.mapping:
+            # under column mapping the files carry physical nested names,
+            # so _is_shredded_layout would miss the layout and the
+            # positional logical-name rebuild would map
+            # metadata/value/typed_value onto the declared struct fields —
+            # silent garbage when types line up
+            raise NotImplementedError(
+                "shredded-variant reads on a column-mapped table are not "
+                "supported by the pydelta source; unmap the table first"
+            )
+        if any(
+            DeltaTable._has_variant(f.dataType)
+            for f in schema.fields
+            if f.name not in self.shredded
+        ):
+            raise NotImplementedError(variant_refusal)
+        for f in schema.fields:
+            if f.name in self.shredded or f.name in _CDF_COLS:
+                self.spark_types[f.name] = f.dataType
+        # arrow types precomputed ONCE (executors must not re-parse the
+        # schema JSON per field per file)
+        self.arrow_types = {
+            n: _spark_to_arrow_type(dt) for n, dt in self.spark_types.items()
+        }
+        self.col_order = schema.fieldNames()
+        data = [
+            f.name
+            for f in schema.fields
+            if f.name not in self.part_cols and f.name not in _CDF_COLS
+        ]
+        self.phys_to_logical = {self.mapping.get(c, c): c for c in data}
+        # id-mode column mapping: ship (logical -> field id) to every
+        # partition; executors resolve THEIR file's arbitrary column
+        # names through its footer ids (`_read_partition`)
+        self.field_ids: dict[str, int] | None = None
+        if DeltaTable._mapping_mode(meta) == "id":
+            self.field_ids = {
+                f.name: int(f.metadata["delta.columnMapping.id"])
+                for f in log_schema.fields
+                if f.name in data
+            }
+
+    def may_match(self, add: dict) -> bool:
+        """False when the add's logged stats prove no row matches
+        ``where``."""
+        return not self.conjuncts or _file_may_match(
+            add, self.conjuncts, self.part_cols, self.phys_path
+        )
+
+    def part_values(self, add: dict) -> dict:
+        pv_raw = _as_dict(add.get("partitionValues"))
+        return {
+            c: _coerce_partition_value(
+                pv_raw.get(self.mapping.get(c, c)), self.spark_types[c]
+            )
+            for c in self.part_cols
+        }
+
+    def partition(self, add: dict, drop=None, **tags) -> PyDeltaPartition:
+        """The read task for one add action: its file, typed partition
+        values and the rows its deletion vector drops (``drop``
+        overrides them); ``tags`` are the change-feed fields."""
+        if drop is None:
+            d = add.get("deletionVector")
+            drop = _dv.resolve_dv_rows(self.root, d) if d else []
+        return PyDeltaPartition(
+            os.path.join(self.root, urllib.parse.unquote(add["path"])),
+            self.phys_to_logical,
+            self.part_values(add),
+            sorted(drop),
+            self.conjuncts,
+            field_ids=self.field_ids,
+            size_hint=add.get("size") or 0,
+            **tags,
+        )
+
+
 class PyDeltaReader(DataSourceReader):
     def __init__(
         self, options: dict, schema: T.StructType, snapshot=None
     ) -> None:
         opts = _lower_opts(options)
         self._pack_opts = opts
-        self._root = opts["path"]
-        table = DeltaTable(self._root)
+        root = opts["path"]
+        table = DeltaTable(root)
         if snapshot is not None:
             _version, meta, adds = snapshot
         else:
-            version = _resolve_version(table, opts)
-            meta, adds = table._snapshot_state(version)
-        self._meta = meta
-        self._adds = adds
-        self._schema = schema
-        if DeltaTable._has_variant(schema):
-            raise NotImplementedError(
-                "the pydelta source cannot read VARIANT columns as "
-                "variants (pyarrow does not recognize the parquet VARIANT "
-                "logical type); use the Spark read path — or, when the "
-                "table is SHREDDED (variantShredding), pass an explicit "
-                ".schema(...) declaring the column as a struct of its "
-                "shredded typed paths and this source serves them from "
-                "the typed_value leaves"
-            )
-        self._mapping = table._column_mapping(meta) or {}
-        self._part_cols = meta.get("partitionColumns") or []
-        self._cdf = str(opts.get("readchangefeed", "")).lower() == "true"
-        # id-mode column mapping: ship (logical -> field id) to every
-        # partition; executors resolve THEIR file's arbitrary column
-        # names through its footer ids (`_read_partition`)
-        self._field_ids: dict[str, int] | None = None
-        if (meta.get("configuration") or {}).get(
-            "delta.columnMapping.mode"
-        ) == "id":
-            log_schema_ids = T.StructType.fromJson(
-                json.loads(meta["schemaString"])
-            )
-            self._field_ids = {
-                f.name: int((f.metadata or {})["delta.columnMapping.id"])
-                for f in log_schema_ids.fields
-                if f.name not in self._part_cols
-            }
-        where = opts.get("where")
-        # STRICT parse: this reader's row filtering IS the conjunct list
-        # (nothing re-applies the predicate above the scan), so a
-        # predicate that does not fully decompose must error, never
-        # silently under-filter
-        self._conjuncts: list[tuple[str, str, object]] = (
-            _parse_conjuncts_strict(where) if where else []
+            meta, adds = table._snapshot_state(_resolve_version(table, opts))
+        self._plan = _FilePlan(
+            root,
+            meta,
+            schema,
+            opts.get("where"),
+            variant_refusal="the pydelta source cannot read VARIANT columns "
+            "as variants (pyarrow does not recognize the parquet VARIANT "
+            "logical type); use the Spark read path — or, when the table "
+            "is SHREDDED (variantShredding), pass an explicit "
+            ".schema(...) declaring the column as a struct of its "
+            "shredded typed paths and this source serves them from the "
+            "typed_value leaves",
         )
-        # arrow types per column, precomputed ONCE (read() must not
-        # re-parse the schema JSON per field per file on executors)
-        log_schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        self._arrow_types = {
-            f.name: _spark_to_arrow_type(f.dataType) for f in log_schema.fields
-        }
-        self._spark_types = {f.name: f.dataType for f in log_schema.fields}
-        self._col_order = [f.name for f in log_schema.fields]
-        # shredded-variant read mode: the LOG declares VARIANT but the
-        # caller's .schema(...) declares a STRUCT for the column -> the
-        # executor unshreds the files' typed_value leaves into that
-        # struct (sources/shredding.py; residual binaries refuse there)
-        for f in schema.fields:
-            if isinstance(
-                self._spark_types.get(f.name), T.VariantType
-            ) and isinstance(f.dataType, T.StructType):
-                if self._mapping or self._field_ids:
-                    # mirrors the to_pandas gate: under column mapping
-                    # the files carry physical nested names, so
-                    # _is_shredded_layout would miss the layout and the
-                    # positional logical-name rebuild would map
-                    # metadata/value/typed_value onto the declared
-                    # struct fields — silent garbage when types line up
-                    raise NotImplementedError(
-                        "shredded-variant reads on a column-mapped "
-                        "table are not supported by the pydelta source; "
-                        "unmap the table first"
-                    )
-                self._spark_types[f.name] = f.dataType
-                self._arrow_types[f.name] = _spark_to_arrow_type(f.dataType)
+        self._adds = adds
         self._cdf_parts: list | None = None
-        if self._cdf:
+        if str(opts.get("readchangefeed", "")).lower() == "true":
             # batch change feed (delta-spark's
             # .option("readChangeFeed", true).option("startingVersion", N)
             # [.option("endingVersion", M)]): one bounded range of the
@@ -324,49 +395,18 @@ class PyDeltaReader(DataSourceReader):
             if start_v > latest:
                 raise ValueError(
                     f"startingVersion {start_v} is after the latest "
-                    f"commit {latest} of {self._root}"
+                    f"commit {latest} of {root}"
                 )
             if end_v < start_v or end_v > latest:
                 raise ValueError(
                     f"endingVersion {end_v} out of range "
                     f"[{start_v}, {latest}]"
                 )
-            import pyarrow as pa
-
-            self._arrow_types["_change_type"] = pa.string()
-            self._arrow_types["_commit_version"] = pa.int64()
-            self._col_order += ["_change_type", "_commit_version"]
-            phys = lambda c: self._mapping.get(c, c)  # noqa: E731
-            data_cols = {
-                phys(f.name): f.name
-                for f in schema.fields
-                if f.name not in self._part_cols
-                and f.name not in ("_change_type", "_commit_version")
-            }
-            spark_types = self._spark_types
-
-            def part_values_of(add: dict) -> dict:
-                pv_raw = _as_dict(add.get("partitionValues"))
-                return {
-                    c: _coerce_partition_value(pv_raw.get(phys(c)), spark_types[c])
-                    for c in self._part_cols
-                }
-
             # planned eagerly (driver-side, like partitions()); the range
             # is [startingVersion, endingVersion] INCLUSIVE of the start —
             # the shared planner's half-open contract takes start-1
             self._cdf_parts = _plan_cdf_partitions(
-                table,
-                self._root,
-                data_cols,
-                part_values_of,
-                start_v - 1,
-                end_v,
-                field_ids=self._field_ids,
-                # `where` composes with the change feed as ROW filtering
-                # only (change partitions carry no file stats to prune
-                # on; the executor conjunct filter is exact)
-                conjuncts=self._conjuncts,
+                table, self._plan, start_v - 1, end_v
             )
 
     # ----------------------------------------------------------- planning
@@ -386,86 +426,46 @@ class PyDeltaReader(DataSourceReader):
     def partitions(self):
         if self._cdf_parts is not None:
             out = self._cdf_parts
-            self._cdf_parts = None
-            self._adds = []
-            self._meta = {}
-            return _pack_partitions(out, self._pack_opts)
-        phys = lambda c: self._mapping.get(c, c)  # noqa: E731
-        adds = self._adds
-        conjuncts = self._conjuncts
-        if conjuncts:
-            phys_path = _phys_path_fn(self._meta)
-            adds = [
-                a
-                for a in adds
-                if _file_may_match(a, conjuncts, self._part_cols, phys_path)
-            ]
-        out = []
-        types = self._spark_types
-        phys_to_logical = {
-            phys(f.name): f.name
-            for f in self._schema.fields
-            if f.name not in self._part_cols
-        }
-        for a in adds:
-            pv_raw = a.get("partitionValues") or {}
-            part_values = {}
-            for c in self._part_cols:
-                raw = pv_raw.get(phys(c))
-                part_values[c] = _coerce_partition_value(raw, types[c])
-            dv_rows: list[int] = []
-            if a.get("deletionVector"):
-                # module captured at import time: runtime relative imports
-                # would fail inside the planner's Python worker, where the
-                # package is shipped by value, not installed
-                dv_rows = _dv.resolve_dv_rows(self._root, a["deletionVector"])
-            out.append(
-                PyDeltaPartition(
-                    os.path.join(
-                        self._root, urllib.parse.unquote(a["path"])
-                    ),
-                    phys_to_logical,
-                    part_values,
-                    dv_rows,
-                    conjuncts,
-                    field_ids=self._field_ids,
-                    size_hint=a.get("size") or 0,
-                )
-            )
+        else:
+            plan = self._plan
+            out = [plan.partition(a) for a in self._adds if plan.may_match(a)]
         # the planner pickles (partitions, read function) for executors
         # AFTER this call: drop the driver-only state so each task does
         # not redundantly carry the whole add list + stats JSON (linear
         # in table size times task count)
         self._adds = []
-        self._meta = {}
+        self._cdf_parts = None
         return _pack_partitions(out, self._pack_opts)
 
     # ---------------------------------------------------------- execution
 
     def read(self, partition) -> Iterator:
-        tasks = (
-            partition.tasks
-            if isinstance(partition, PyDeltaMultiPartition)
-            else [partition]
-        )
-        for t in tasks:
-            yield from _read_partition(
-                t, self._arrow_types, self._spark_types, self._col_order
-            )
+        return _read_tasks(partition, self._plan)
 
 
-def _read_partition(
-    partition: PyDeltaPartition, arrow_types, spark_types, col_order
-) -> Iterator:
-    """Executor-side read of one data file: schema-directed pyarrow
-    read, physical->logical rename (nested included), DV application by
-    row position, typed partition-value injection, arrow-type conforming,
-    exact conjunct filtering, declared-order output. Shared by the batch
-    reader and the log-tailing STREAM reader (same file semantics; the
-    stream just scopes partitions to a commit range)."""
+def _read_tasks(partition, plan: _FilePlan) -> Iterator:
+    """Executor-side read of one (possibly bin-packed) input partition."""
+    tasks = (
+        partition.tasks
+        if isinstance(partition, PyDeltaMultiPartition)
+        else [partition]
+    )
+    for t in tasks:
+        yield from _read_partition(t, plan)
+
+
+def _read_partition(partition: PyDeltaPartition, plan: _FilePlan) -> Iterator:
+    """Read of one data file: schema-directed pyarrow read,
+    physical->logical rename (nested included), DV application by row
+    position, typed partition-value injection, arrow-type conforming,
+    exact conjunct filtering, read-schema-order output. The one file
+    reader of the batch reader, the log-tailing STREAM reader (which
+    just scopes partitions to a commit range) and, driver-side,
+    `DeltaTable.to_pandas`."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_type
 
     if partition is None:
         # partitions() pruned every file (e.g. a where-option literal
@@ -478,6 +478,7 @@ def _read_partition(
     # null-fill the rest — requesting a missing column would crash
     # the whole scan (ArrowInvalid), where Delta semantics say NULL
     # one ParquetFile open serves both the footer schema and the read
+    arrow_types, spark_types = plan.arrow_types, plan.spark_types
     pf = pq.ParquetFile(partition.file_path)
     if getattr(partition, "field_ids", None):
         # id mode: the file's column NAMES are arbitrary — resolve each
@@ -516,17 +517,23 @@ def _read_partition(
     # leaves BEFORE any name conforming — the file's {metadata, value,
     # typed_value} group is physical layout, not logical shape
     for idx, name in enumerate(tbl.column_names):
-        dt = spark_types.get(name)
-        if isinstance(dt, T.StructType) and _is_shredded_layout(
-            tbl.column(idx).type
-        ):
-            arr = unshred_struct_array(
-                tbl.column(idx).combine_chunks(), dt, _spark_to_arrow_type
+        if name not in plan.shredded:
+            continue
+        if not _is_shredded_layout(tbl.column(idx).type):
+            raise NotImplementedError(
+                f"column {name!r} in {partition.file_path} is not stored "
+                "in the shredded layout; the binary variant is unreadable "
+                "here — use the Spark read path"
             )
-            tbl = tbl.set_column(idx, pa.field(name, arr.type), arr)
+        arr = unshred_struct_array(
+            tbl.column(idx).combine_chunks(),
+            spark_types[name],
+            _spark_to_arrow_type,
+        )
+        tbl = tbl.set_column(idx, pa.field(name, arr.type), arr)
     # nested struct fields still carry PHYSICAL names after the
     # top-level rename — rebuild positionally to logical (column
-    # mapping; same contract as DeltaTable.to_pandas)
+    # mapping)
     for idx, name in enumerate(tbl.column_names):
         dt = spark_types.get(name)
         if dt is not None and _arrow_names_differ(tbl.column(idx).type, dt):
@@ -539,7 +546,8 @@ def _read_partition(
             logical,
             pa.nulls(
                 tbl.num_rows,
-                type=arrow_types.get(logical) or pa.string(),
+                type=arrow_types.get(logical)
+                or to_arrow_type(DeltaTable._strip_meta(spark_types[logical])),
             ),
         )
     if partition.dv_rows:
@@ -607,136 +615,70 @@ def _read_partition(
     # columns were appended at the end, so the table MUST be put in
     # declared-schema order or values silently land in the wrong
     # columns (reproduced: a middle-column evolution swapped fields)
-    tbl = tbl.select(col_order)
+    tbl = tbl.select(plan.col_order)
     yield from tbl.to_batches()
 
 
 def _plan_cdf_partitions(
-    table: DeltaTable,
-    root: str,
-    data_cols: dict[str, str],
-    part_values_of,
-    start_version: int,
-    end_version: int,
-    field_ids: dict[str, int] | None = None,
-    conjuncts: list | None = None,
+    table: DeltaTable, plan: _FilePlan, start_version: int, end_version: int
 ) -> list:
     """Change-feed read plan for versions in (start_version,
-    end_version]: the SAME diff semantics as `DeltaTable.read_changes` —
-    adds are inserts minus their own DV, a DV-carrying re-add of a live
-    path emits only the newly-dead positions as deletes, a remove
-    without re-add emits the file's then-live rows as deletes, and
-    ``dataChange=false`` (OPTIMIZE) commits emit nothing. Commits that
-    staged spec ``cdc`` actions are consumed EXCLUSIVELY from their
-    ``_change_data/`` files (true update pre/post images). Shared by the
-    streaming CDF source (per micro-batch) and the batch
-    ``readChangeFeed`` reader (one [startingVersion, endingVersion]
-    range).
+    end_version], over the commits of `DeltaTable._change_walk` — the
+    walk `DeltaTable.read_changes` scans too, so both feeds share one
+    diff semantics and one expired-log refusal: inserts minus their own
+    DV, only the newly-dead positions of a DV re-add as deletes, the
+    then-live rows of a remove without re-add as deletes, and a commit's
+    spec ``cdc`` files (true update pre/post images) as its only
+    changes. Shared by the streaming CDF source (per micro-batch) and
+    the batch ``readChangeFeed`` reader (one [startingVersion,
+    endingVersion] range). ``where`` composes as ROW filtering only:
+    change partitions carry no file stats to prune on, and the executor
+    conjunct filter is exact either way.
 
     Per-path prior state replays from version 0 — O(log tail)
     driver-side JSON; a long-lived production stream would cache the
     live-set per checkpointed offset."""
-    # mirror DeltaTable.read_changes: the prior-state replay is only
-    # correct if every commit JSON up to end_version still exists —
-    # after cleanup_metadata expires the prefix, a DV re-add of a
-    # pre-checkpoint file would find prior=None and be emitted as a
-    # full-file insert (double-reading live rows), and a remove of such
-    # a file would emit no delete. A silently wrong feed is worse than
-    # a loud refusal.
-    missing = sorted(
-        set(range(end_version + 1)) - set(table._commit_versions())
-    )
-    if missing:
-        raise ValueError(
-            f"change feed over versions 0..{end_version} needs every "
-            f"commit JSON, but "
-            f"{missing[:5]}{'...' if len(missing) > 5 else ''} "
-            "are not in the log (expired by cleanup_metadata?)"
-        )
-    live: dict[str, dict] = {}
-    for v in table._commit_versions():
-        if v > start_version:
-            break
-        for action in table._read_commit(v):
-            if "add" in action:
-                live[action["add"]["path"]] = action["add"]
-            elif "remove" in action:
-                live.pop(action["remove"]["path"], None)
 
     def dv_rows(a: dict) -> set[int]:
         d = a.get("deletionVector")
-        return set(_dv.resolve_dv_rows(root, d)) if d else set()
+        return set(_dv.resolve_dv_rows(plan.root, d)) if d else set()
 
+    cdc_cols = {**plan.phys_to_logical, "_change_type": "_change_type"}
     out: list = []
-
-    def part(add, v, change, keep=None, drop=()):
-        out.append(
-            PyDeltaPartition(
-                os.path.join(root, urllib.parse.unquote(add["path"])),
-                data_cols,
-                part_values_of(add),
-                sorted(drop),
-                # row-level conjuncts only: change partitions carry no
-                # file stats, so there is nothing sound to prune on —
-                # the executor filter is exact either way
-                list(conjuncts or []),
-                keep_rows=sorted(keep) if keep is not None else None,
-                change_type=change,
-                commit_version=v,
-                field_ids=field_ids,
-                size_hint=add.get("size") or 0,
+    for v, cdc, inserts, dv_readds, removed in table._change_walk(
+        start_version + 1, end_version
+    ):
+        for c in cdc:
+            # the file carries its own _change_type column
+            out.append(
+                PyDeltaPartition(
+                    os.path.join(plan.root, urllib.parse.unquote(c["path"])),
+                    cdc_cols,
+                    plan.part_values(c),
+                    [],
+                    plan.conjuncts,
+                    commit_version=v,
+                    size_hint=c.get("size") or 0,
+                )
             )
-        )
-
-    for v in range(start_version + 1, end_version + 1):
-        removed: dict[str, dict] = {}
-        actions_v = table._read_commit(v)
-        # spec cdc actions provide the commit's change rows directly
-        # (incl. update pre/post images); use them EXCLUSIVELY and
-        # only maintain file state from the add/remove actions
-        cdc_in_commit = [a["cdc"] for a in actions_v if "cdc" in a]
-        for action in actions_v:
-            if "remove" in action:
-                path = action["remove"]["path"]
-                prior = live.pop(path, None)
-                if prior is not None and action["remove"].get(
-                    "dataChange", True
-                ):
-                    removed[path] = prior
-        for action in actions_v:
-            if "add" not in action:
-                continue
-            a = action["add"]
-            prior = removed.pop(a["path"], None)
-            live[a["path"]] = a
-            if cdc_in_commit or not a.get("dataChange", True):
-                continue
-            new_dead = dv_rows(a)
-            if prior is not None:
-                delta = new_dead - dv_rows(prior)
-                if delta:
-                    part(a, v, "delete", keep=delta)
-            else:
-                part(a, v, "insert", drop=new_dead)
-        if cdc_in_commit:
-            cdc_cols = dict(data_cols)
-            cdc_cols["_change_type"] = "_change_type"
-            for c in cdc_in_commit:
+        for a in inserts:
+            out.append(plan.partition(a, change_type="insert", commit_version=v))
+        for a, prior in dv_readds:
+            newly_dead = dv_rows(a) - dv_rows(prior)
+            if newly_dead:
                 out.append(
-                    PyDeltaPartition(
-                        os.path.join(root, urllib.parse.unquote(c["path"])),
-                        cdc_cols,
-                        part_values_of(c),
-                        [],
-                        list(conjuncts or []),
-                        change_type=None,  # the file carries its own
+                    plan.partition(
+                        a,
+                        drop=(),
+                        keep_rows=sorted(newly_dead),
+                        change_type="delete",
                         commit_version=v,
-                        size_hint=c.get("size") or 0,
                     )
                 )
-            continue
-        for _path, prior in sorted(removed.items()):
-            part(prior, v, "delete", drop=dv_rows(prior))
+        for prior in removed:
+            out.append(
+                plan.partition(prior, change_type="delete", commit_version=v)
+            )
     return out
 
 
@@ -813,21 +755,6 @@ class PyDeltaStreamReader(DataSourceStreamReader):
         self._root = opts["path"]
         table = DeltaTable(self._root)
         meta, _adds = table._snapshot_state(None)  # validates protocol
-        # id-mode column mapping: same per-file field-id resolution as
-        # the batch reader — ship (logical -> field id) to every
-        # partition, executors resolve through their file's footer
-        self._field_ids: dict[str, int] | None = None
-        if (meta.get("configuration") or {}).get(
-            "delta.columnMapping.mode"
-        ) == "id":
-            part_cols_id = meta.get("partitionColumns") or []
-            self._field_ids = {
-                f.name: int((f.metadata or {})["delta.columnMapping.id"])
-                for f in T.StructType.fromJson(
-                    json.loads(meta["schemaString"])
-                ).fields
-                if f.name not in part_cols_id
-            }
         # options that would be SILENTLY ignored must refuse instead
         for bad in ("versionasof", "timestampasof"):
             if opts.get(bad) is not None:
@@ -836,27 +763,20 @@ class PyDeltaStreamReader(DataSourceStreamReader):
                     "STREAMING source (use startingVersion to scope the "
                     "tail, or the batch reader for point-in-time reads)"
                 )
-        # stream `where`: STRICT conjunct parse (the row filter below IS
-        # the only application — a predicate that does not fully
-        # decompose must error, never silently under-filter, which on a
-        # stream means silently-wrong rows forever). Data commits prune
-        # by file stats AND filter rows exactly; change-feed batches
-        # filter rows only (change files carry no stats contract).
-        where = opts.get("where")
-        self._conjuncts: list[tuple[str, str, object]] = (
-            _parse_conjuncts_strict(where) if where else []
+        # stream `where`: on a stream silent under-filtering means
+        # silently-wrong rows forever. Data commits prune by file stats
+        # AND filter rows exactly; change-feed batches filter rows only
+        # (change files carry no stats contract).
+        self._plan = _FilePlan(
+            self._root,
+            meta,
+            schema,
+            opts.get("where"),
+            variant_refusal="the pydelta source cannot stream VARIANT "
+            "columns (pyarrow does not recognize the parquet VARIANT "
+            "logical type); use the Spark read path",
         )
-        self._phys_path = _phys_path_fn(meta)
         self._table = table
-        self._schema = schema
-        if DeltaTable._has_variant(schema):
-            raise NotImplementedError(
-                "the pydelta source cannot stream VARIANT columns "
-                "(pyarrow does not recognize the parquet VARIANT logical "
-                "type); use the Spark read path"
-            )
-        self._mapping = table._column_mapping(meta) or {}
-        self._part_cols = meta.get("partitionColumns") or []
         self._start_version = int(opts.get("startingversion", "0"))
         self._cdf = str(opts.get("readchangefeed", "")).lower() == "true"
         self._ignore_deletes = (
@@ -883,18 +803,6 @@ class PyDeltaStreamReader(DataSourceStreamReader):
         #: admission cursor: highest version already returned by
         #: latestOffset or planned by partitions (None until learned)
         self._pos: int | None = None
-        log_schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        self._arrow_types = {
-            f.name: _spark_to_arrow_type(f.dataType) for f in log_schema.fields
-        }
-        self._spark_types = {f.name: f.dataType for f in log_schema.fields}
-        self._col_order = [f.name for f in log_schema.fields]
-        if self._cdf:
-            import pyarrow as pa
-
-            self._arrow_types["_change_type"] = pa.string()
-            self._arrow_types["_commit_version"] = pa.int64()
-            self._col_order += ["_change_type", "_commit_version"]
 
     # ----------------------------------------------------------- offsets
 
@@ -941,42 +849,6 @@ class PyDeltaStreamReader(DataSourceStreamReader):
         self._pos = end
         return {"version": end}
 
-    def _data_cols_map(self) -> dict[str, str]:
-        phys = lambda c: self._mapping.get(c, c)  # noqa: E731
-        return {
-            phys(f.name): f.name
-            for f in self._schema.fields
-            if f.name not in self._part_cols
-            and f.name not in ("_change_type", "_commit_version")
-        }
-
-    def _part_values_of(self, add: dict) -> dict:
-        phys = lambda c: self._mapping.get(c, c)  # noqa: E731
-        pv_raw = _as_dict(add.get("partitionValues"))
-        return {
-            c: _coerce_partition_value(pv_raw.get(phys(c)), self._spark_types[c])
-            for c in self._part_cols
-        }
-
-    def _cdf_partitions(self, start: dict, end: dict):
-        """Change-feed micro-batch plan for versions (start, end] —
-        shared diff semantics in `_plan_cdf_partitions` (the batch CDF
-        reader plans through the same function)."""
-        return _plan_cdf_partitions(
-            self._table,
-            self._root,
-            self._data_cols_map(),
-            self._part_values_of,
-            start["version"],
-            end["version"],
-            field_ids=self._field_ids,
-            # `where` composes with the change feed as ROW filtering
-            # only — same contract as the batch CDF reader (change
-            # partitions carry no file stats to prune on; the executor
-            # conjunct filter is exact)
-            conjuncts=self._conjuncts,
-        )
-
     def partitions(self, start: dict, end: dict):
         # learn the cursor from the planned range (covers checkpoint
         # restarts, where initialOffset is never consulted)
@@ -984,7 +856,10 @@ class PyDeltaStreamReader(DataSourceStreamReader):
                         end["version"])
         if self._cdf:
             return _pack_partitions(
-                self._cdf_partitions(start, end), self._pack_opts
+                _plan_cdf_partitions(
+                    self._table, self._plan, start["version"], end["version"]
+                ),
+                self._pack_opts,
             )
         out = []
         for v in range(start["version"] + 1, end["version"] + 1):
@@ -1029,26 +904,11 @@ class PyDeltaStreamReader(DataSourceStreamReader):
                         "paired remove; streaming would double-read "
                         "rows — use the batch read path"
                     )
-                if self._conjuncts and not _file_may_match(
-                    add, self._conjuncts, self._part_cols, self._phys_path
-                ):
-                    # data-commit adds carry full footer stats: pruning
-                    # here is the same soundness as the batch reader
-                    # (a pruned file PROVABLY holds no matching row)
-                    continue
-                out.append(
-                    PyDeltaPartition(
-                        os.path.join(
-                            self._root, urllib.parse.unquote(add["path"])
-                        ),
-                        self._data_cols_map(),
-                        self._part_values_of(add),
-                        [],
-                        self._conjuncts,
-                        field_ids=self._field_ids,
-                        size_hint=add.get("size") or 0,
-                    )
-                )
+                # data-commit adds carry full footer stats: pruning here
+                # is the same soundness as the batch reader (a pruned
+                # file PROVABLY holds no matching row)
+                if self._plan.may_match(add):
+                    out.append(self._plan.partition(add))
         return _pack_partitions(out, self._pack_opts)
 
     def commit(self, end: dict) -> None:
@@ -1059,15 +919,7 @@ class PyDeltaStreamReader(DataSourceStreamReader):
     # ---------------------------------------------------------- execution
 
     def read(self, partition) -> Iterator:
-        tasks = (
-            partition.tasks
-            if isinstance(partition, PyDeltaMultiPartition)
-            else [partition]
-        )
-        for t in tasks:
-            yield from _read_partition(
-                t, self._arrow_types, self._spark_types, self._col_order
-            )
+        return _read_tasks(partition, self._plan)
 
 
 def register(spark) -> None:

@@ -443,8 +443,34 @@ class TestJvmFreeRead:
         assert pdf.equals(via_spark)
         # time travel without a JVM
         assert sorted(t.to_pandas(version=0)["id"]) == list(range(10))
-        # column pruning
+        # column pruning: a name outside the schema raises, none is none
         assert list(t.to_pandas(columns=["sym"]).columns) == ["sym"]
+        with pytest.raises(ValueError, match="nope"):
+            t.to_pandas(columns=["sym", "nope"])
+        none = t.to_pandas(columns=[])
+        assert list(none.columns) == [] and len(none) == 15
+        # date, decimal and timestamp partition values come back typed,
+        # as in Spark
+        d = DeltaTable(str(tmp_path / "d"))
+        d.write(
+            make_df(spark, 0, 6).select(
+                "id",
+                F.date_add(
+                    F.lit("2024-01-01").cast("date"),
+                    (F.col("id") % 2).cast("int"),
+                ).alias("day"),
+                (F.col("id") % 3 / 4).cast("decimal(5,2)").alias("lvl"),
+                F.timestamp_seconds(F.col("id") % 2 * 3600).alias("at"),
+                F.timestamp_seconds(F.col("id") * 60).alias("ts"),
+            ),
+            partition_by=["day", "lvl", "at"],
+        )
+        pdf = d.to_pandas().sort_values("id", ignore_index=True)
+        via_spark = (
+            d.read(spark).toPandas().sort_values("id", ignore_index=True)
+        )
+        assert pdf.equals(via_spark)
+        assert {type(v).__name__ for v in pdf["day"]} == {"date"}
 
     def test_to_pandas_reads_partitioned_and_checkpointed_tables(
         self, spark, tmp_path
@@ -460,6 +486,38 @@ class TestJvmFreeRead:
         assert set(pdf["sym"]) == {"S0", "S1", "S2"}
         via_spark = t.read(spark).toPandas()
         assert sorted(pdf["sym"]) == sorted(via_spark["sym"])
+
+    def test_to_pandas_starts_no_jvm(self, spark, tmp_path):
+        """The dashboard-side read (S4) runs in a process that never
+        starts Spark: `to_pandas` reads through the pydelta file reader,
+        which must not reach for a JVM either."""
+        import subprocess
+        import sys
+        from pathlib import Path
+
+        t = DeltaTable(str(tmp_path / "t"))
+        t.write(make_df(spark, 0, 6), partition_by=["sym"])
+        script = tmp_path / "jvm_free.py"
+        script.write_text(
+            "import sys\n"
+            f"sys.path.insert(0, {str(Path(__file__).resolve().parents[1])!r})\n"
+            "import pyspark\n"
+            "from cryptopulse_real_time_arbitrage_detection_lakehouse_spark"
+            ".sources.delta import DeltaTable\n"
+            f"pdf = DeltaTable({t.path!r}).to_pandas()\n"
+            "got = sorted(zip(pdf['id'], pdf['sym']))\n"
+            "assert got == [(i, f'S{i % 3}') for i in range(6)], got\n"
+            "assert pyspark.SparkContext._gateway is None\n"
+            "print('JVM_FREE_OK')\n"
+        )
+        out = subprocess.run(
+            [sys.executable, str(script)],
+            cwd=str(tmp_path),
+            capture_output=True,
+            text=True,
+            timeout=120,
+        )
+        assert "JVM_FREE_OK" in out.stdout, out.stderr[-2000:]
 
 
 class TestColumnMapping:
@@ -818,7 +876,7 @@ class TestColumnMapping:
         )
 
         r = PyDeltaStreamReader({"path": root}, out.schema)
-        assert r._field_ids and set(r._field_ids) == {"sym", "px"}
+        assert r._plan.field_ids and set(r._plan.field_ids) == {"sym", "px"}
 
 
 class TestColumnMappingWrites:
